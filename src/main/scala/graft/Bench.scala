@@ -1,9 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_QUERIES=a,b times a subset. SPARK_GRAFT_BENCH_RUNS=k
     // (default 3) repeats the whole suite k times in ONE session, printing
     // one JSON line per run, then a FINAL line whose per-query map is the
@@ -13,89 +11,48 @@ object Bench {
     // min too. Runs 2+ also prove the persisted-relation lifecycle
     // converges to a warm steady state instead of accumulating. The
     // driver's contract (last line = the round's numbers) is unchanged.
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // See Verify: split sizing for the scaled single-file trees (the
-      // sf10 stress bench sets 4-8m so text scans parallelize; unset,
-      // the 128m default leaves gate/bench-scale behavior unchanged).
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
-    val selected = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .sortBy(_._1) // fixed name order: per-query numbers comparable across rounds
-    // Untimed FULL-SWEEP warmup (run 0): execute every selected query once
-    // before any timing starts. Beyond JVM/JIT/parquet-reader warmup, this
-    // pre-builds every CacheRegistry relation the suite touches, so no
-    // timed query is ever charged its shared chain's cold build — without
-    // it, the alphabetically FIRST consumer of a registry key absorbs the
-    // whole chain (r13 judge finding: cold g_degree_hist read 4.3 s for
-    // the graph.edges distinct-shuffle built once; warm ≤1.1 s), which
-    // makes single-run records and per-query budgets order-fragile. After
-    // the sweep, run ordering cannot flip a budget verdict: every timed
-    // run sees the same warm steady state. SPARK_GRAFT_COLD=1 skips the
-    // sweep (for deliberate cold-path measurement).
-    if (!sys.env.get("SPARK_GRAFT_COLD").contains("1")) {
-      selected.foreach { case (_, fn) =>
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case _: Throwable => () }
-      }
-    }
+    val spark = Harness.session(32)
+    val selected = Harness.select(sys.env.get("SPARK_GRAFT_QUERIES"))
+    Harness.warm(spark, sfDir, selected)
     // Every emitted line carries an "errors" array naming queries that
     // THREW during that run (final line: union across runs). A thrown
-    // query must never masquerade as a green timing — tools/bench_guard.py
-    // fails any record whose errors list is non-empty, so a broken query
-    // turns the official record red instead of silently recording the
-    // wall-time of the failed attempt.
+    // query has no time in the "queries" map — it must never masquerade
+    // as a green timing — and tools/bench_guard.py fails any record whose
+    // errors list is non-empty.
     // run_id ties the compact stdout summary to the BENCH_FULL.json it
     // points at: the full file is overwritten every run, so the guard
     // refuses a pointer whose run_id differs from the pointed file's
     // (round-11 advice — a stale pointer made the guard self-compare).
     val runId = s"${System.currentTimeMillis()}-${ProcessHandle.current().pid()}"
-    def record(results: Map[String, Double], errors: Set[String]): String = {
-      val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
+    def obj(m: Map[String, Double]): String =
+      m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def record(results: Map[String, Double], errors: Set[String], extra: String = ""): String = {
       val errs = errors.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
       val total = if (results.nonEmpty) results.values.sum else 0.0
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","run_id":"$runId"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec",$extra"queries":${obj(results)},"errors":$errs,"sf":"$sfDir","run_id":"$runId"}"""
     }
     val perRun = (1 to runs).map { _ =>
-      var errors = Set.empty[String]
-      val results = selected.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        // toRdd.count() forces full evaluation of every operator in the
-        // plan; a bare Dataset.count() would let Catalyst collapse pure
-        // projections into a metadata-only row count and under-report the
-        // map-only queries.
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case _: Throwable => errors += name }
-        name -> (System.nanoTime() - t0) / 1e9
-      }.toMap
-      println(record(results, errors))
+      val timed = selected.map { case (name, fn) => name -> Harness.time(fn(spark, sfDir)) }
+      val results = timed.collect { case (name, Right(t)) => name -> t }.toMap
+      val errors = timed.collect { case (name, Left(_)) => name }.toSet
+      println(record(results.map { case (k, t) => k -> t.totalS }, errors))
       (results, errors)
     }
-    // Official record: per-query MIN across runs. With 95 queries the full
-    // JSON line is ~2.5 KB — larger than the driver's 2000-char stdout
-    // tail, which is why BENCH_r09/r10 ended up "parsed": null. So the
-    // full record goes to BENCH_FULL.json (cwd = repo root under the
-    // driver's sbt invocation), and the very LAST stdout line is a compact
-    // summary — guaranteed to fit the tail and json-parse — whose "full"
-    // field names the file carrying the complete per-query map.
-    val finalResults =
-      if (runs > 1) perRun.flatMap(_._1.toSeq).groupMapReduce(_._1)(_._2)(math.min)
-      else perRun.head._1
+    // Official record: per-query MIN across runs, with "plan_s" (frame
+    // build + physical planning) taken from the run that gave each min.
+    // With 190 queries the full JSON line is larger than the driver's
+    // 2000-char stdout tail, so the full record goes to a file and the
+    // very LAST stdout line is a compact summary — guaranteed to fit the
+    // tail and json-parse — whose "full" field names that file. "plan_s"
+    // precedes "queries" so tools/bench_guard.py's line scrape still
+    // captures whole lines.
+    val best = perRun.flatMap(_._1.toSeq)
+      .groupMapReduce(_._1)(_._2)((a, b) => if (b.totalS < a.totalS) b else a)
+    val finalResults = best.map { case (k, t) => k -> t.totalS }
     val finalErrors = perRun.flatMap(_._2).toSet
-    val full = record(finalResults, finalErrors)
+    val full = record(finalResults, finalErrors,
+      s""""plan_s":${obj(best.map { case (k, t) => k -> t.planS })},""")
     println(full)
     // Anchor the full-record path. The official record is an IMMUTABLE
     // per-run snapshot — bench_records/BENCH_FULL-<runId>.json — so a

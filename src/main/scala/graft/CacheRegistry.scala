@@ -24,13 +24,18 @@ import org.apache.spark.storage.StorageLevel
   * an entry even though their plan objects differ.
   */
 object CacheRegistry {
-  private val frames = new ConcurrentHashMap[String, DataFrame]()
-  // Checkpoint-backed entries additionally hold localCheckpoint RDD
-  // blocks that a Dataset.unpersist does NOT release (the persist cache
-  // and the checkpointed RDD are separate storage entries); release paths
-  // run these cleanups so the registry's lifecycle contract stays
-  // complete for cachedCheckpointed entries (r18 advisory).
-  private val cleanups = new ConcurrentHashMap[String, () => Unit]()
+  /** A registered frame and what releasing it takes, stored as ONE map
+    * value so registration and release can never see half an entry.
+    * Checkpoint-backed entries additionally hold localCheckpoint RDD
+    * blocks that a Dataset.unpersist does NOT release (the persist cache
+    * and the checkpointed RDD are separate storage entries); `cleanup`
+    * frees those too, keeping the lifecycle contract complete for
+    * cachedCheckpointed entries (r18 advisory).
+    */
+  private final case class Entry(frame: DataFrame, cleanup: () => Unit) {
+    def release(): Unit = { frame.unpersist(false); cleanup() }
+  }
+  private val entries = new ConcurrentHashMap[String, Entry]()
 
   private def k(spark: SparkSession, key: String): String =
     s"${System.identityHashCode(spark)}:$key"
@@ -45,27 +50,32 @@ object CacheRegistry {
       case _ => ()
     }
 
-  /** Return the session's persisted frame for `key`, building + persisting
-    * it on first use. MEMORY_AND_DISK: evictable under pressure, never OOM.
+  /** Get-or-build the session's entry for `key`.
     *
     * get + putIfAbsent rather than computeIfAbsent: builders nest (a
     * registered relation may itself consume another registered relation —
     * simhashPairs builds on simhash), and computeIfAbsent holds the bucket
     * lock across the build, turning that nesting into
     * IllegalStateException("Recursive update"). The unlocked race is
-    * benign: a losing duplicate build is unpersisted before the winner is
-    * returned, so exactly one persisted instance survives per key.
+    * benign: a losing duplicate entry is released whole before the winner
+    * is returned, so exactly one persisted instance survives per key.
     */
-  def cached(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
+  private def register(spark: SparkSession, key: String)(build: => Entry): DataFrame = {
     val fullKey = k(spark, key)
-    val existing = frames.get(fullKey)
-    if (existing != null) existing
+    val existing = entries.get(fullKey)
+    if (existing != null) existing.frame
     else {
-      val built = build.persist(StorageLevel.MEMORY_AND_DISK)
-      val raced = frames.putIfAbsent(fullKey, built)
-      if (raced == null) built else { built.unpersist(false); raced }
+      val built = build
+      val raced = entries.putIfAbsent(fullKey, built)
+      if (raced == null) built.frame else { built.release(); raced.frame }
     }
   }
+
+  /** Return the session's persisted frame for `key`, building + persisting
+    * it on first use. MEMORY_AND_DISK: evictable under pressure, never OOM.
+    */
+  def cached(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    register(spark, key)(Entry(build.persist(StorageLevel.MEMORY_AND_DISK), () => ()))
 
   /** [[cached]] for a lineage-truncated relation: the built plan is cut
     * behind a LAZY `localCheckpoint` before persisting, so consumers embed
@@ -86,46 +96,23 @@ object CacheRegistry {
     * unrecoverable — this entry point is for session-scoped derived
     * relations whose rebuild-from-parquet is the session restart itself.
     */
-  def cachedCheckpointed(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val fullKey = k(spark, key)
-    val existing = frames.get(fullKey)
-    if (existing != null) existing
-    else {
+  def cachedCheckpointed(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    register(spark, key) {
       val cp = build.localCheckpoint(false)
-      val built = cp.persist(StorageLevel.MEMORY_AND_DISK)
-      val raced = frames.putIfAbsent(fullKey, built)
-      if (raced == null) {
-        cleanups.put(fullKey, () => unpersistCheckpointRdds(cp))
-        built
-      } else {
-        built.unpersist(false)
-        unpersistCheckpointRdds(cp)
-        raced
-      }
+      Entry(cp.persist(StorageLevel.MEMORY_AND_DISK), () => unpersistCheckpointRdds(cp))
     }
-  }
 
   /** Unpersist and drop one entry (no-op if absent). Blocking=false: let
     * executors free blocks asynchronously.
     */
-  def release(spark: SparkSession, key: String): Unit = {
-    val fullKey = k(spark, key)
-    Option(frames.remove(fullKey)).foreach(_.unpersist(false))
-    Option(cleanups.remove(fullKey)).foreach(_.apply())
-  }
+  def release(spark: SparkSession, key: String): Unit =
+    Option(entries.remove(k(spark, key))).foreach(_.release())
 
   /** Unpersist and drop every entry registered for this session. */
   def releaseAll(spark: SparkSession): Unit = {
     val prefix = s"${System.identityHashCode(spark)}:"
-    val it = frames.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.startsWith(prefix)) { e.getValue.unpersist(false); it.remove() }
-    }
-    val ic = cleanups.entrySet().iterator()
-    while (ic.hasNext) {
-      val e = ic.next()
-      if (e.getKey.startsWith(prefix)) { e.getValue.apply(); ic.remove() }
+    entries.keySet().forEach { key =>
+      if (key.startsWith(prefix)) Option(entries.remove(key)).foreach(_.release())
     }
   }
 }

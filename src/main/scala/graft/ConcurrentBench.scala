@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Concurrent-throughput bench arm (r15) — the TPC-DS "throughput test"
   * shape: N driver threads each run a DISJOINT quarter of the gated
@@ -39,34 +38,14 @@ import org.apache.spark.sql.SparkSession
 object ConcurrentBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nThreads = sys.env.get("SPARK_GRAFT_BENCH_THREADS").map(_.toInt).getOrElse(4)
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The multi-tenant scheduling mode: concurrent jobs time-slice the
-      // 32 cores instead of queueing whole-job FIFO.
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
-    val selected = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .sortBy(_._1)
+    // FAIR is the multi-tenant scheduling mode: concurrent jobs time-slice
+    // the cores instead of queueing whole-job FIFO.
+    val spark = Harness.session(32, "spark.scheduler.mode" -> "FAIR")
+    val selected = Harness.select(sys.env.get("SPARK_GRAFT_QUERIES"))
     // Untimed warm sweep — identical contract to graft.Bench.
-    if (!sys.env.get("SPARK_GRAFT_COLD").contains("1")) {
-      selected.foreach { case (_, fn) =>
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case _: Throwable => () }
-      }
-    }
-    val parts: Seq[Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]] =
+    Harness.warm(spark, sfDir, selected)
+    val parts: Seq[Seq[(String, Harness.Query)]] =
       selected.zipWithIndex.groupBy(_._2 % nThreads).toSeq.sortBy(_._1)
         .map(_._2.map(_._1))
     val results = new java.util.concurrent.ConcurrentHashMap[String, Double]()
@@ -78,11 +57,10 @@ object ConcurrentBench {
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"pool$i")
         var sum = 0.0
         part.foreach { case (name, fn) =>
-          val q0 = System.nanoTime()
-          try { fn(spark, sfDir).queryExecution.toRdd.count() }
-          catch { case _: Throwable => errors.add(name); () }
-          val dt = (System.nanoTime() - q0) / 1e9
-          results.put(name, dt); sum += dt
+          Harness.time(fn(spark, sfDir)) match {
+            case Right(t) => results.put(name, t.totalS); sum += t.totalS
+            case Left(_) => errors.add(name)
+          }
         }
         threadSums.put(i, sum)
       }, s"bench-$i")

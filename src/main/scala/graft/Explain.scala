@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan and wall time of named
   * queries from SparkEntry.queries.
@@ -9,30 +8,22 @@ import org.apache.spark.sql.SparkSession
   * r18 measurement fixes (guide §1.4): timing forces every operator via
   * `queryExecution.toRdd.count()` — the same action Bench times — because
   * a bare `Dataset.count()` lets Catalyst prune columns/subtrees and
-  * under-reports map-only queries. Three timed runs follow one untimed
-  * warmup (JIT + shared CacheRegistry chains), mirroring Bench's
-  * warm-min methodology. SPARK_GRAFT_PLAN_DIR=<dir> additionally writes
-  * each query's `explain("formatted")` to `<dir>/<name>.txt`.
+  * under-reports map-only queries. Three timed runs (Harness.time, split
+  * into planning and execution) follow one untimed warmup (JIT + shared
+  * CacheRegistry chains), mirroring Bench's warm-min methodology.
+  * SPARK_GRAFT_PLAN_DIR=<dir> additionally writes each query's
+  * `explain("formatted")` to `<dir>/<name>.txt`.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val spark = Harness.session(32)
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     planDir.foreach(d => new java.io.File(d).mkdirs())
     names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+      val fn = SparkEntry.queries(name)
+      val df = fn(spark, sfDir)
       planDir match {
         case Some(d) =>
           val txt = df.queryExecution.explainString(
@@ -42,17 +33,12 @@ object Explain {
           println(s"[explain] $name plan -> $d/$name.txt")
         case None => df.explain("formatted")
       }
-      df.queryExecution.toRdd.count() // untimed warmup (JIT + registry chains)
+      Harness.warm(spark, sfDir, Seq(name -> fn))
       val times = (1 to 3).map { i =>
-        val t0 = System.nanoTime()
-        // Rebuild the frame per run exactly like Bench: re-timing one
-        // memoized QueryExecution would skip every stage whose shuffle
-        // output is already on disk and under-report all but the final
-        // stage.
-        val n = SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"[explain] $name run $i: $dt%.3f s, $n rows")
-        dt
+        val t = Harness.time(fn(spark, sfDir)).fold(throw _, identity)
+        println(f"[explain] $name run $i: ${t.totalS}%.3f s " +
+          f"(plan ${t.planS}%.3f, exec ${t.execS}%.3f), ${t.rows} rows")
+        t.totalS
       }
       println(f"[explain] $name min: ${times.min}%.3f s")
     }

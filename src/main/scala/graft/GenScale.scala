@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up of a driver fixture (default sf0.1 → a 10×
@@ -71,14 +71,7 @@ object GenScale {
     // generate vocab-mode fixtures under the retired name).
     require(docMode == "vocab" || docMode == "suffix" || docMode == "longtok",
       s"unknown docMode '$docMode' (expected 'vocab', 'suffix' or 'longtok')")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
     def shards(df: DataFrame)(f: (DataFrame, Long) => DataFrame): DataFrame =
       (0 until factor).map(i => f(df, i.toLong * Stride)).reduce(_ union _)
     // One parquet FILE per table (like the driver fixtures — the DuckDB

@@ -9,9 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * expressions as SQL functions, so they are usable from `spark.sql` /
   * `expr` strings as well as the Column API:
   *
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)        // or
-  *     .config("spark.sql.extensions", "graft.GraftExtensions")
+  *   builder.withExtensions(new GraftExtensions)          // or
+  *   builder.config("spark.sql.extensions", "graft.GraftExtensions")
   *
   *   SELECT poly_hash(text), word_shingle_hashes(text, 3, true),
   *          long_vector_dot(a, b) ...

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Day-2 cost measurement for incremental cluster maintenance
   * (Dedup.incrementalClustersSplit): with the day-1 state (corpus
   * labels) already stored, how much does folding a new batch in cost,
@@ -21,29 +19,16 @@ import org.apache.spark.sql.SparkSession
 object IncrBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "testdata-sf1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def time[A](f: => A): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
+    val spark = Harness.session(32)
     import graft.operators.Dedup
     // Warm the shared fingerprint cache outside every timing (a stored
     // corpus would have fingerprints on disk; the batch's are its own
     // tiny cost) — isolates pair-generation + CC, the costs that differ.
-    Dedup.simhash(spark, sfDir).queryExecution.toRdd.count()
-    val tFull = time(Dedup.dedupClusters(spark, sfDir).queryExecution.toRdd.count())
+    Harness.minSeconds(1)(Dedup.simhash(spark, sfDir))
+    val tFull = Harness.minSeconds(1)(Dedup.dedupClusters(spark, sfDir))
     val results = Seq(100L, 2L).map { mod =>
-      val tDay1 = time(Dedup.corpusLabelsFor(spark, sfDir, mod)
-        .queryExecution.toRdd.count())
-      val tDay2 = time(Dedup.incrementalClustersSplit(spark, sfDir, mod)
-        .queryExecution.toRdd.count())
+      val tDay1 = Harness.minSeconds(1)(Dedup.corpusLabelsFor(spark, sfDir, mod))
+      val tDay2 = Harness.minSeconds(1)(Dedup.incrementalClustersSplit(spark, sfDir, mod))
       s""""mod$mod":{"day1":$tDay1,"day2":$tDay2}"""
     }
     println(s"""{"metric":"incr_clusters","sf":"$sfDir","full":$tFull,${results.mkString(",")}}""")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool behind PlanGuardSpec: plans every gated query (no execution)
   * and prints one line per query — shuffle-exchange count and the
   * presence of the two plan shapes the guard restricts (cartesian
@@ -25,16 +23,8 @@ object PlanScout {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    val spark = Harness.session(32)
+    Harness.select(None).foreach { case (name, fn) =>
       try {
         val p = initialPlan(fn(spark, sfDir))
         val flags = Seq(

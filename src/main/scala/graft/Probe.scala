@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool (r18): interleaved A/B of the Par.widen flag inside ONE JVM —
   * two sibling sessions (separate CacheRegistry namespaces via
   * identityHashCode; the `off` session sets `spark.graft.par.widen=off`),
@@ -19,14 +18,7 @@ object Probe {
       else Seq("g_dup_triangles", "g_dup_triangles_simhash")
     val rounds = if (args.length > 1) args(1).toInt else 4
     val flag = if (args.length > 2) args(2) else "spark.graft.par.widen"
-    val root = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    root.sparkContext.setLogLevel("ERROR")
+    val root = Harness.session(32)
     val on = root.newSession()
     val off = root.newSession()
     // flag forms: "conf.key" — the off arm sets it to the literal "off"
@@ -39,14 +31,12 @@ object Probe {
     } else off.conf.set(flag, "off")
     Seq(on, off).foreach(GraftExtensions.register)
     val sf = "/root/testdata/sf0.1"
+    val selected = queries.map(q => q -> SparkEntry.queries(q))
     val mins = scala.collection.mutable.Map[(String, String), Double]()
     // untimed warmup: build both arms' registry chains
-    for (q <- queries; s <- Seq(on, off))
-      SparkEntry.queries(q)(s, sf).queryExecution.toRdd.count()
-    for (r <- 1 to rounds; q <- queries; (s, tag) <- Seq((on, "on"), (off, "off"))) {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(q)(s, sf).queryExecution.toRdd.count()
-      val dt = (System.nanoTime() - t0) / 1e9
+    Seq(on, off).foreach(Harness.warm(_, sf, selected))
+    for (r <- 1 to rounds; (q, fn) <- selected; (s, tag) <- Seq((on, "on"), (off, "off"))) {
+      val dt = Harness.minSeconds(1)(fn(s, sf))
       println(f"PROBE $q $tag round$r $dt%.2f s")
       val key = (q, tag)
       mins(key) = math.min(mins.getOrElse(key, Double.MaxValue), dt)

@@ -89,26 +89,9 @@ object SkewBench {
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
   }
 
-  private def time(df: => DataFrame, runs: Int = 3): Double =
-    (1 to runs).map { _ =>
-      val t0 = System.nanoTime()
-      df.queryExecution.toRdd.count()
-      (System.nanoTime() - t0) / 1e9
-    }.min
-
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_SKEW_ROWS", "4000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val spark = Harness.session(32)
 
     val base = java.nio.file.Files.createTempDirectory("graft-skewbench").toString
     val dirs = Map("uniform" -> s"$base/uniform", "skewed" -> s"$base/skewed")
@@ -121,16 +104,15 @@ object SkewBench {
     val queries = Seq(
       "q3_windowed_count", "q3_windowed_count_salted",
       "q3_windowed_count_salted_dynamic",
-      "q4_star_cardinality", "q4_star_join")
+      "q4_star_cardinality", "q4_star_join").map(q => q -> SparkEntry.queries(q))
     // Warm EVERY timed query on BOTH fixtures, untimed: the uniform/skewed
     // comparison assumes equal cache state, so first-touch costs (file
     // listing, codegen) must not land inside any one timed cell.
-    for (d <- dirs.values; q <- queries) SparkEntry.queries(q)(spark, d).count()
+    dirs.values.foreach(Harness.warm(spark, _, queries))
 
-    val results = queries.map { q =>
-      val fn = SparkEntry.queries(q)
-      val u = time(fn(spark, dirs("uniform")))
-      val s = time(fn(spark, dirs("skewed")))
+    val results = queries.map { case (q, fn) =>
+      val u = Harness.minSeconds(3)(fn(spark, dirs("uniform")))
+      val s = Harness.minSeconds(3)(fn(spark, dirs("skewed")))
       q -> (u, s)
     }
     val qs = results.map { case (q, (u, s)) =>
@@ -149,8 +131,8 @@ object SkewBench {
     def statsPass(dir: String) = graft.operators.Salting.dynamicDRel(
       Shapes.withLtw(Shapes.zxEvents(spark, dir), Shapes.LogicTimeSlotMs), m)
     dirs.values.foreach(d => statsPass(d).count()) // same warm rule
-    val su = time(statsPass(dirs("uniform")))
-    val ss = time(statsPass(dirs("skewed")))
+    val su = Harness.minSeconds(3)(statsPass(dirs("uniform")))
+    val ss = Harness.minSeconds(3)(statsPass(dirs("skewed")))
     println(f"""{"metric":"dynamic_d_stats_pass","uniform":$su%.3f,"skewed":$ss%.3f,"ratio":${ss / su}%.3f,"rows":$n}""")
 
     // ---- user-key skew over the event-analytics family ----
@@ -159,14 +141,13 @@ object SkewBench {
       writeUserEvents(spark, dir, kind == "skewed", n)
     }
     val userQueries = Seq("a_funnel", "a_outliers", "a_retention",
-      "a_moving_window", "a_moving_window_bucketed")
+      "a_moving_window", "a_moving_window_bucketed").map(q => q -> SparkEntry.queries(q))
     // Same warm-everything rule as above: each timed query touches both
     // fixtures once untimed before any timing starts.
-    for (d <- userDirs.values; q <- userQueries) SparkEntry.queries(q)(spark, d).count()
-    val userResults = userQueries.map { q =>
-      val fn = SparkEntry.queries(q)
-      val u = time(fn(spark, userDirs("uniform")))
-      val s = time(fn(spark, userDirs("skewed")))
+    userDirs.values.foreach(Harness.warm(spark, _, userQueries))
+    val userResults = userQueries.map { case (q, fn) =>
+      val u = Harness.minSeconds(3)(fn(spark, userDirs("uniform")))
+      val s = Harness.minSeconds(3)(fn(spark, userDirs("skewed")))
       q -> (u, s)
     }
     val uqs = userResults.map { case (q, (u, s)) =>

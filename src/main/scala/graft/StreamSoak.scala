@@ -2,7 +2,7 @@ package graft
 
 import graft.streaming.StreamingParity
 import graft.streaming.StreamingParity.{IdEvent, StreamDoc, UserEvent}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -37,18 +37,9 @@ object StreamSoak {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/testdata-sf1")
     val shards = sys.env.get("SPARK_GRAFT_SOAK_SHARDS").map(_.toInt).getOrElse(16)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val work = java.nio.file.Files.createTempDirectory("graft-soak").toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(16, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
 
     // ---- Inputs: equal-width time-range shards, written SEQUENTIALLY so

@@ -26,10 +26,11 @@ object Tables {
   // parquet from disk, and the schema is byte-identical to what inference
   // would return (it IS inference's output, computed once). Nothing about
   // results, plans, or data flow changes — only the driver stops re-deriving
-  // the same StructType. `spark.graft.tables.schemaCache=off` pins the
-  // old per-call inference for A/B measurement.
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  // the same StructType. The key carries the file's length and mtime, so a
+  // fixture regenerated at the same path within one JVM re-infers instead
+  // of reading its new bytes under the old schema.
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long), org.apache.spark.sql.types.StructType]()
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // events.parquet carries TIMESTAMP(MICROS) in the live fixtures
@@ -41,13 +42,11 @@ object Tables {
     try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     catch { case _: Throwable => () }
     val path = s"$sfDir/$name.parquet"
-    if (spark.conf.getOption("spark.graft.tables.schemaCache").contains("off"))
-      spark.read.parquet(path)
-    else {
-      val schema = schemaMemo.computeIfAbsent(path,
-        _ => spark.read.parquet(path).schema)
-      spark.read.schema(schema).parquet(path)
-    }
+    val hPath = new org.apache.hadoop.fs.Path(path)
+    val st = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(hPath)
+    val schema = schemaMemo.computeIfAbsent((path, st.getLen, st.getModificationTime),
+      _ => spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
   }
 
   // Widened fact loaders (r18, guide §2.5): the fixture tables are ONE

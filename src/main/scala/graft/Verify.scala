@@ -1,42 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. An optional
-  * third arg (comma-separated names) restricts the dump to a subset for
-  * quick iteration; the driver's 2-arg contract is unchanged. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, plus
+  * verify_errors.json naming every query that threw (exit 1 if any). An
+  * optional third arg (comma-separated names) restricts the dump to a
+  * subset for quick iteration; the driver's 2-arg contract is unchanged. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    val only = args.lift(2)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Input-split sizing for the scaled single-file fixtures (r15): the
-      // sf10 tree is one 8 MB-row-group parquet file per table, and the
-      // 128 MB default packs a whole 60 MB text table into ONE scan task
-      // — every explode stage (trigrams, shingles, BM25) then runs
-      // single-threaded however many cores the session has. 100 TB
-      // corpora arrive as thousands of files; the sandbox equivalent is
-      // sizing splits to the compressed bytes whose EXPLODED work fills
-      // a task (set 4-8m for testdata-sf10 runs; the driver's gate-scale
-      // fixtures are unaffected by the 128m default).
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores ts as TIMESTAMP(NANOS); read as epoch-nanos
-      // Long (Shapes.eventTimeMs handles both representations).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val subset = args.lift(2)
+    val spark = Harness.session(4)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    // A query that throws is a gate FAILURE, never a skip: every error is
+    // recorded in verify_errors.json (which tools/check.py and
+    // tools/check_scale.py read) and the run exits 1 after the dumps.
+    val errors = Harness.select(subset).flatMap { case (name, fn) =>
       // repartition(1), NOT coalesce(1): coalesce is a narrow dependency,
       // so it would collapse every stage back to the last shuffle into
       // the single write task — at sf10 that single-threaded the heavy
@@ -44,10 +22,13 @@ object Verify {
       // 48 CPU-min in one task). The round-trip shuffle on the (small,
       // post-filter) result keeps upstream parallelism and still lands
       // one part-file per query.
-      try fn(spark, sfDir).repartition(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        fn(spark, sfDir).repartition(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> s"${e.getClass.getName}: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -84,6 +65,10 @@ object Verify {
           s" ${q("aux")}: ${q(c.aux)}, ${q("setup")}: $setup}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/scale_oracle_sql.json"), scaleJson)
+    val errJson = errors.map { case (k, m) => s"${q(k)}: ${q(m)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/verify_errors.json"),
+      s"""{"subset": ${subset.map(q).getOrElse("null")}, "errors": $errJson}""")
     spark.stop()
+    if (errors.nonEmpty) sys.exit(1)
   }
 }

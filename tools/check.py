@@ -6,6 +6,11 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 Reads each <verifyOutDir>/<name> parquet (written by graft.Verify), runs the
 matching SQL from oracle_sql.json in DuckDB with the sfDir tables registered
 as views, sorts columns by name and rows by value, and compares.
+
+Fails closed: every query graft.Verify recorded as thrown in
+verify_errors.json is a FAIL, and on a full run (no subset argument) so is
+any query with no output dir. Subset runs skip the others, with the count
+printed.
 """
 import json, sys, glob, os
 import duckdb
@@ -20,6 +25,18 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.sort_values(by=list(df.columns), ignore_index=True)
     return df
 
+def verify_errors(out_dir):
+    """(errors, full_run) from graft.Verify's verify_errors.json: the map of
+    queries that threw to their messages, and whether the run covered every
+    query (no subset argument). A missing file fails: the dir is not a
+    complete graft.Verify run."""
+    path = f"{out_dir}/verify_errors.json"
+    if not os.path.exists(path):
+        sys.exit(f"FAIL: {path} missing -- not a complete graft.Verify run")
+    doc = json.load(open(path))
+    return doc["errors"], doc["subset"] is None
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     con = duckdb.connect()
@@ -29,13 +46,19 @@ def main():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    errors, full_run = verify_errors(out_dir)
     n_ok = n_bad = n_skip = 0
+    for name, msg in sorted(errors.items()):
+        print(f"FAIL {name}: graft.Verify threw: {msg}"); n_bad += 1
     for name, sql in sorted(oracle.items()):
+        if name in errors:
+            continue
         # graft.Verify always dumps the FULL oracle map (so a subset re-run
-        # never truncates a full-sweep record); a query with no output DIR
-        # simply wasn't part of this run — skip it, with a visible count.
-        # A dir that exists but holds no parquet is still a FAIL (the
-        # query ran and produced nothing / crashed mid-write).
+        # never truncates a full-sweep record); on a subset run a query
+        # with no output DIR simply wasn't part of it — skip it, with a
+        # visible count (a full run fails on any skip below). A dir that
+        # exists but holds no parquet is still a FAIL (the query ran and
+        # produced nothing / crashed mid-write).
         if not os.path.isdir(f"{out_dir}/{name}"):
             n_skip += 1; continue
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
@@ -71,7 +94,10 @@ def main():
     print(f"== {n_ok} ok, {n_bad} bad, {n_skip} skipped (no output dir) ==")
     if n_ok == 0:
         print("ZERO queries checked OK — wrong outDir or empty run; failing.")
-    sys.exit(1 if n_bad or n_ok == 0 else 0)
+    skip_fails = full_run and n_skip > 0
+    if skip_fails:
+        print(f"FULL run skipped {n_skip} queries (no output dir); failing.")
+    sys.exit(1 if n_bad or n_ok == 0 or skip_fails else 0)
 
 if __name__ == "__main__":
     main()

@@ -23,7 +23,9 @@ infeasible equality oracle:
     in the fixture's 43k-doc mega-component.
 
 Exit is nonzero on any FAIL, any TIMEOUT (bounded oracles exist exactly
-so none is tolerable), or zero OKs.
+so none is tolerable), any query graft.Verify recorded as thrown in
+verify_errors.json, any skipped query on a full (non-subset) Verify run,
+or zero OKs.
 
 Usage: python3 tools/check_scale.py <sfDir> <verifyOutDir> [seconds]
                 [--only=name1,name2]
@@ -34,6 +36,7 @@ DuckDB of cores turns feasible oracles into spurious TIMEOUTs.
 import json, sys, glob, os, multiprocessing as mp
 import duckdb
 import pandas as pd
+from check import verify_errors
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -232,10 +235,17 @@ def main():
         for e in dag_errors:
             print(f"TRUST-DAG {e}")
         sys.exit(1)
+    errors, full_run = verify_errors(out_dir)
     counts = {"OK": 0, "FAIL": 0, "TIMEOUT": 0, "SKIP": 0}
+    for name, msg in sorted(errors.items()):
+        if only is None or name in only:
+            print(f"FAIL   {name} (graft.Verify threw: {msg})"); counts["FAIL"] += 1
     for name in sorted(oracle):
+        if name in errors:
+            continue
         # The oracle map is always the full surface (graft.Verify never
-        # truncates it); a query with no output dir wasn't in this run.
+        # truncates it); a query with no output dir wasn't in this run —
+        # a subset run skips it, a full run fails on it below.
         if not os.path.isdir(f"{out_dir}/{name}"):
             counts["SKIP"] += 1; continue
         if name in scale:
@@ -259,7 +269,11 @@ def main():
           f"{counts['SKIP']} skipped (no output dir) ==")
     if counts["OK"] == 0:
         print("ZERO queries verified OK — the pass proves nothing; failing.")
-    sys.exit(1 if counts["FAIL"] or counts["TIMEOUT"] or counts["OK"] == 0 else 0)
+    skip_fails = full_run and counts["SKIP"] > 0
+    if skip_fails:
+        print(f"FULL run skipped {counts['SKIP']} queries (no output dir); failing.")
+    sys.exit(1 if counts["FAIL"] or counts["TIMEOUT"] or counts["OK"] == 0
+             or skip_fails else 0)
 
 
 if __name__ == "__main__":
