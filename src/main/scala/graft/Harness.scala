@@ -18,6 +18,14 @@ object Harness {
     def totalS: Double = planS + execS
   }
 
+  /** The RocksDB state store, as a session conf. transformWithState
+    * requires it; the other stateful operators default to the HDFS-backed
+    * store.
+    */
+  val RocksDbStateStore: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** The shared session. `SPARK_GRAFT_CPUS` overrides `defaultCpus`;
     * `extra` carries a tool's own confs (FAIR scheduling, the RocksDB
     * state store).

@@ -41,6 +41,17 @@ object Shapes {
   /** Number of sources/ports, = reference L = 3. */
   val PortsNum: Int = 3
 
+  /** Q2's port-completeness rule inside a `groupBy(word, ltw)` over
+    * per-port counts: the min count if all `PortsNum` ports reported,
+    * else 0 (state/src/main/scala/cluster/naive/HashJoin.scala:89-103).
+    */
+  def minIfComplete(cnt: Column): Column =
+    when(count(lit(1)) === PortsNum, min(cnt)).otherwise(lit(0L))
+
+  /** The same rule over one window's per-port counts held in keyed state. */
+  def minIfComplete(counts: Iterable[Long]): Long =
+    if (counts.size == PortsNum) counts.min else 0L
+
   /** epoch-ms column from the events `ts` (parity with DuckDB epoch_ms).
     *
     * Dispatches on the arriving type: the live `events.parquet` stores
@@ -70,13 +81,17 @@ object Shapes {
     ((eventTime - pmod(eventTime, lit(slotMs))) / lit(slotMs)).cast("long")
 
   /** `(event_time, port, word)` shape. */
-  def portWordEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = Tables.events(spark, sfDir)
+  def portWordEvents(spark: SparkSession, sfDir: String): DataFrame =
+    portWord(Tables.events(spark, sfDir))
+
+  /** The `(event_time, port, word)` projection of any events-shaped
+    * relation, batch or streaming.
+    */
+  def portWord(ev: DataFrame): DataFrame =
     ev.select(
       eventTimeMs(ev).as("event_time"),
       pmod(col("user_id"), lit(3)).cast("long").as("port"),
       col("event_type").as("word"))
-  }
 
   /** `(event_time, z, x)` shape. */
   def zxEvents(spark: SparkSession, sfDir: String): DataFrame = {

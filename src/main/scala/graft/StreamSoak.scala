@@ -38,8 +38,7 @@ object StreamSoak {
     val sfDir = args.headOption.getOrElse("/root/repo/testdata-sf1")
     val shards = sys.env.get("SPARK_GRAFT_SOAK_SHARDS").map(_.toInt).getOrElse(16)
     val work = java.nio.file.Files.createTempDirectory("graft-soak").toString
-    val spark = Harness.session(16, "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val spark = Harness.session(16, Harness.RocksDbStateStore)
     import spark.implicits._
 
     // ---- Inputs: equal-width time-range shards, written SEQUENTIALLY so

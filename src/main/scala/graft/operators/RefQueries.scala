@@ -64,12 +64,18 @@ object RefQueries {
   // emission policy, not semantics — in batch the trigger is end-of-input
   // and the CASE expression is the whole contract.
   // --------------------------------------------------------------------
-  def q2WindowedMinComplete(spark: SparkSession, sfDir: String): DataFrame =
-    Shapes.withLtw(Shapes.portWordEvents(spark, sfDir), slot)
+  /** The Q2 plan over any `(event_time, port, word)`-shaped relation,
+    * factored like [[q1Plan]] so the streaming spec's batch contract runs
+    * the SAME plan at its own slot width.
+    */
+  def q2Plan(portWord: DataFrame, slotMs: Long = slot): DataFrame =
+    Shapes.withLtw(portWord, slotMs)
       .groupBy("word", "ltw", "port").agg(count(lit(1)).as("cnt"))
       .groupBy("word", "ltw")
-      .agg(when(count(lit(1)) === Shapes.PortsNum, min("cnt"))
-        .otherwise(lit(0L)).as("min_cnt"))
+      .agg(Shapes.minIfComplete(col("cnt")).as("min_cnt"))
+
+  def q2WindowedMinComplete(spark: SparkSession, sfDir: String): DataFrame =
+    q2Plan(Shapes.portWordEvents(spark, sfDir))
 
   val q2Sql: String =
     s"""SELECT word, ltw, CASE WHEN count(*) = 3 THEN min(cnt) ELSE 0 END AS min_cnt

@@ -1,6 +1,7 @@
 package graft.streaming
 
 
+import graft.Shapes
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -24,38 +25,15 @@ object EventStreams {
     graft.Tables.events(spark, sfDir).schema
 
   /** Streaming `(event_time ms, port, word)` shape from the fixture dir —
-    * the streaming twin of Shapes.portWordEvents (same ms derivation via
-    * Shapes.eventTimeMs, so batch and stream agree by construction).
+    * the SAME Shapes.portWord projection the batch queries read, so batch
+    * and stream agree by construction.
     */
-  def portWordStream(spark: SparkSession, sfDir: String): DataFrame = {
+  def portWordStream(spark: SparkSession, sfDir: String): DataFrame =
     // Glob form: FileStreamSource requires a directory basePath; the glob
     // anchors it at sfDir while matching only the events table (works
     // whether events.parquet is a single file or a directory).
-    val src = spark.readStream.schema(eventsSchema(spark, sfDir))
-      .parquet(s"$sfDir/events*")
-    src.select(graft.Shapes.eventTimeMs(src).as("event_time"),
-      pmod(col("user_id"), lit(3)).cast("long").as("port"),
-      col("event_type").as("word"))
-  }
-
-  /** Q2 over the file stream with day windows (Shapes.LogicTimeSlotMs) —
-    * append mode; closed windows match RefQueries.q2WindowedMinComplete.
-    */
-  def q2DayWindowStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val slot = graft.Shapes.LogicTimeSlotMs
-    portWordStream(spark, sfDir)
-      .withColumn("event_ts", timestamp_millis(col("event_time")))
-      .withWatermark("event_ts", "0 milliseconds")
-      .groupBy(window(col("event_ts"), s"$slot milliseconds"),
-        col("word"), col("port"))
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy(col("window"), col("word"))
-      .agg(when(count(lit(1)) === graft.Shapes.PortsNum, min(col("cnt")))
-        .otherwise(lit(0L)).as("min_cnt"))
-      .select(col("word"),
-        expr(s"unix_millis(window.start) div $slot").as("ltw"),
-        col("min_cnt"))
-  }
+    Shapes.portWord(spark.readStream.schema(eventsSchema(spark, sfDir))
+      .parquet(s"$sfDir/events*"))
 }
 
 /** Structured-Streaming parity for the reference's streaming core
@@ -76,21 +54,24 @@ object EventStreams {
   * mode is the emit-once-per-closed-window contract, and watermark
   * eviction is the state cleanup.
   *
-  * Two implementations of the Q2 shape ("per (word, window) min over
-  * per-port counts; incomplete window → 0",
-  * state/src/main/scala/cluster/naive/HashJoin.scala:89-103):
+  * The Q2 shape ("per (word, window) min over per-port counts;
+  * incomplete window → 0",
+  * state/src/main/scala/cluster/naive/HashJoin.scala:89-103) has one
+  * implementation per plan family:
   *
-  *   1. [[q2WindowedAgg]] — the idiomatic form: watermark + two chained
-  *      windowed aggregations in append mode (Spark 4 supports stacked
-  *      stateful aggs on the same event-time window).
-  *   2. [[q2FlatMapGroups]] — the reference-shaped form: explicit keyed
-  *      state via flatMapGroupsWithState + EventTimeTimeout, state =
-  *      per-port counts, emission exactly at watermark passage — a
-  *      faithful (but engine-managed) analogue of C4's
-  *      trigger-scan-emit-evict loop.
+  *   1. [[q2WindowedAgg]] — the declarative form: a watermark per source,
+  *      union, then two chained windowed aggregations in append mode
+  *      (Spark 4 supports stacked stateful aggs on the same event-time
+  *      window). The only Q2 stream with map-side partial aggregation,
+  *      and the only one that runs on the default state store.
+  *   2. [[q2TransformWithState]] — the reference-shaped form: explicit
+  *      keyed state (per-port counts in a MapState) with one event-time
+  *      timer per (word, window), emission exactly at watermark passage —
+  *      the engine-managed analogue of C4's trigger-scan-emit-evict loop.
   *
-  * Both are asserted equivalent to the batch CASE-expression form by
-  * StreamingParitySpec (MemoryStream fixtures from FIXTURES.md §4).
+  * Both are asserted equal to the batch form [[q2Batch]] (the gated
+  * RefQueries.q2Plan) by StreamingParitySpec (MemoryStream fixtures from
+  * FIXTURES.md §4).
   */
 object StreamingParity {
 
@@ -102,36 +83,45 @@ object StreamingParity {
   /** Emitted result per closed (word, window). */
   case class Q2Result(word: String, ltw: Long, min_cnt: Long)
 
-  /** Per-key streaming state: counts per port. */
-  case class PortCounts(counts: Map[Int, Long])
-
-  /** Window width in ms and expected port arity (reference
-    * `logic_time_slot` / `ports_num`).
+  /** Window width in ms (reference `logic_time_slot`); the port arity
+    * is Shapes.PortsNum.
     */
   val SlotMs: Long = 1000L
-  val PortsNum: Int = 3
 
   private def withEventTs(events: Dataset[PwEvent]): DataFrame =
     events.toDF()
       .withColumn("event_ts", timestamp_millis(col("event_time")))
       .withColumn("ltw", expr(s"event_time div $SlotMs"))
 
-  /** Idiomatic Q2: watermark + windowed count per (word, port, window),
-    * re-aggregated to min-with-completeness per (word, window), append
-    * mode. Delay 0 ms = the reference's assumption of per-source in-order
-    * timestamps (SURVEY.md §2.8).
+  /** Declarative Q2 over one or more `(event_time ms, port, word)`
+    * sources (any integral `port` type): windowed count per (word, port,
+    * window), re-aggregated to min-with-completeness per (word, window),
+    * append mode. Delay 0 ms = the reference's assumption of per-source
+    * in-order timestamps (SURVEY.md §2.8).
+    *
+    * Several sources are the reference's core watermark invention made
+    * engine-native: each source carries its OWN punctuation timetable and
+    * the trigger fires at the MIN over sources
+    * (state/src/main/scala/timetable/MyStateJoinUtils.scala:25-65, min at
+    * :35/:58). Each input gets its own `withWatermark` BEFORE the union,
+    * and Structured Streaming's default multi-watermark policy
+    * (`spark.sql.streaming.multipleWatermarkPolicy = min`) combines them —
+    * a laggard source holds back emission for every key, exactly the
+    * reference's completeness contract. (Watermarking AFTER the union
+    * would instead track the global max — the wrong semantics.)
     */
-  def q2WindowedAgg(events: Dataset[PwEvent]): DataFrame =
-    withEventTs(events)
-      .withWatermark("event_ts", "0 milliseconds")
-      .groupBy(window(col("event_ts"), s"$SlotMs milliseconds"),
+  def q2WindowedAgg(sources: Seq[DataFrame], slotMs: Long = SlotMs): DataFrame =
+    sources
+      .map(_.withColumn("event_ts", timestamp_millis(col("event_time")))
+        .withWatermark("event_ts", "0 milliseconds"))
+      .reduce(_ union _)
+      .groupBy(window(col("event_ts"), s"$slotMs milliseconds"),
         col("word"), col("port"))
       .agg(count(lit(1)).as("cnt"))
       .groupBy(col("window"), col("word"))
-      .agg(when(count(lit(1)) === PortsNum, min(col("cnt")))
-        .otherwise(lit(0L)).as("min_cnt"))
+      .agg(Shapes.minIfComplete(col("cnt")).as("min_cnt"))
       .select(col("word"),
-        expr(s"unix_millis(window.start) div $SlotMs").as("ltw"),
+        expr(s"unix_millis(window.start) div $slotMs").as("ltw"),
         col("min_cnt"))
 
   /** Late/out-of-order observability: total rows the engine dropped for
@@ -155,68 +145,15 @@ object StreamingParity {
       .flatMap(_.stateOperators)
       .map(_.numRowsDroppedByWatermark).sum
 
-  /** Reference-shaped Q2: explicit keyed state (per-port counts) with
-    * event-time timeout at window close — the Structured Streaming
-    * analogue of the forked mapWithState operator (C4). The timeout
-    * replaces punctuation control rows; watermark passage replaces the
-    * trigger scan; returning Iterator.single on timeout replaces the
-    * emit+evict path (state/src/main/scala/cluster/optimized/
+  /** Reference-shaped Q2 on the transformWithState API (typed state
+    * handles + first-class event-time timers, RocksDB-only): the
+    * engine-native analogue of the reference's forked mapWithState
+    * operator (C4), whose state-scan-at-trigger loop becomes
+    * handleExpiredTimer and whose per-key per-port counts become a
+    * MapState handle. The timer replaces punctuation control rows;
+    * watermark passage replaces the trigger scan; emitting on expiry
+    * replaces the emit+evict path (state/src/main/scala/cluster/optimized/
     * HashJoin.scala:77-99).
-    */
-  def q2FlatMapGroups(events: Dataset[PwEvent]): Dataset[Q2Result] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    withEventTs(events)
-      .select(col("event_ts"), col("word"), col("ltw"), col("port"))
-      .withWatermark("event_ts", "0 milliseconds")
-      .as[(java.sql.Timestamp, String, Long, Int)]
-      .groupByKey { case (_, word, ltw, _) => (word, ltw) }
-      .flatMapGroupsWithState[PortCounts, Q2Result](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case ((word, ltw), rows, state: GroupState[PortCounts]) =>
-          if (state.hasTimedOut) {
-            // Watermark passed the window end: emit once, evict.
-            val counts = state.get.counts
-            state.remove()
-            val minCnt =
-              if (counts.size == PortsNum) counts.values.min else 0L
-            Iterator.single(Q2Result(word, ltw, minCnt))
-          } else {
-            var counts = state.getOption.map(_.counts).getOrElse(Map.empty)
-            rows.foreach { case (_, _, _, port) =>
-              counts = counts.updated(port, counts.getOrElse(port, 0L) + 1L)
-            }
-            val end = (ltw + 1) * SlotMs
-            if (end <= state.getCurrentWatermarkMs()) {
-              // This batch's (eviction) watermark already passed the window
-              // end — reachable under cross-batch key skew: a later batch
-              // carries this window's first rows for some key (they clear
-              // the LATE filter, which lags one batch) while the watermark
-              // has moved past the window. setTimeoutTimestamp(end) would
-              // throw (timeouts must be strictly beyond the watermark), so
-              // close the window now: emit once, keep no state. No double
-              // emission is possible — any still-later row for this window
-              // is dropped by the engine's late filter before reaching us.
-              if (state.exists) state.remove()
-              val minCnt = if (counts.size == PortsNum) counts.values.min else 0L
-              Iterator.single(Q2Result(word, ltw, minCnt))
-            } else {
-              state.update(PortCounts(counts))
-              // Close the window when the watermark reaches its end.
-              state.setTimeoutTimestamp(end)
-              Iterator.empty
-            }
-          }
-      }
-  }
-
-  /** Q2 on the transformWithState API (Spark 4's successor to
-    * mapGroupsWithState — typed state handles + first-class event-time
-    * timers, RocksDB-only): the closest engine-native analogue of the
-    * reference's forked mapWithState operator (C4), whose state-scan-at-
-    * trigger loop becomes handleExpiredTimer and whose per-key per-port
-    * counts become a MapState handle. Same contract as q2FlatMapGroups;
-    * the spec runs both to the same closed-window set.
     */
   class Q2StatefulProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[
@@ -233,8 +170,7 @@ object StreamingParity {
     private def closedResult(key: (String, Long)): Q2Result = {
       val m = counts.iterator().toMap
       counts.clear()
-      val minCnt = if (m.size == PortsNum) m.values.min else 0L
-      Q2Result(key._1, key._2, minCnt)
+      Q2Result(key._1, key._2, Shapes.minIfComplete(m.values))
     }
 
     override def handleInputRows(
@@ -248,9 +184,13 @@ object StreamingParity {
       }
       val end = (key._2 + 1) * SlotMs
       if (end <= timers.getCurrentWatermarkInMs()) {
-        // Watermark already past the window end (cross-batch laggard, cf.
-        // q2FlatMapGroups): close immediately — a timer at `end` would be
-        // in the past.
+        // This batch's (eviction) watermark already passed the window end
+        // — reachable under cross-batch key skew: a later batch carries
+        // this window's first rows for some key (they clear the LATE
+        // filter, which lags one batch) while the watermark has moved past
+        // the window. A timer at `end` would be in the past, so close the
+        // window now: emit once, keep no state. Any still-later row for
+        // this window is dropped by the engine's late filter.
         Iterator.single(closedResult(key))
       } else {
         // One event-time timer per key closes the window; register only on
@@ -278,32 +218,6 @@ object StreamingParity {
       .groupByKey { case (_, word, ltw, _) => (word, ltw) }
       .transformWithState(new Q2StatefulProcessor,
         org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** Two-source Q2 — the reference's core watermark invention made
-    * engine-native: each source carries its OWN punctuation timetable and
-    * the trigger fires at the MIN over sources
-    * (state/src/main/scala/timetable/MyStateJoinUtils.scala:25-65, min at
-    * :35/:58). Here each input gets its own `withWatermark` BEFORE the
-    * union, and Structured Streaming's default multi-watermark policy
-    * (`spark.sql.streaming.multipleWatermarkPolicy = min`) combines them —
-    * a laggard source holds back emission for every key, exactly the
-    * reference's completeness contract. (Watermarking AFTER the union
-    * would instead track the global max — the wrong semantics.)
-    */
-  def q2TwoSources(a: Dataset[PwEvent], b: Dataset[PwEvent]): DataFrame = {
-    val wm = (in: Dataset[PwEvent]) =>
-      withEventTs(in).withWatermark("event_ts", "0 milliseconds")
-    wm(a).union(wm(b))
-      .groupBy(window(col("event_ts"), s"$SlotMs milliseconds"),
-        col("word"), col("port"))
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy(col("window"), col("word"))
-      .agg(when(count(lit(1)) === PortsNum, min(col("cnt")))
-        .otherwise(lit(0L)).as("min_cnt"))
-      .select(col("word"),
-        expr(s"unix_millis(window.start) div $SlotMs").as("ltw"),
-        col("min_cnt"))
   }
 
   /** Keyed star-join record: the reference's `"ts z x"` stream shape
@@ -636,8 +550,8 @@ object StreamingParity {
   /** Emitted per user per batch: deepest stage reached so far. */
   case class FunnelProgress(user_id: Long, stage: Long)
 
-  /** The one funnel fold shared by BOTH state-API twins (mapGroupsWithState
-   * and transformWithState) so the two can't silently drift.
+  /** The one funnel fold shared by the in-order and the watermark-buffered
+   * funnel processors, so the two can't silently drift.
    *
    * Sorts the batch's rows by (time, stage rank): the fold is then
    * identical to the batch operator's min-with-ordering semantics within
@@ -679,30 +593,12 @@ object StreamingParity {
     (s, stage)
   }
 
-  def funnelStream(events: Dataset[UserEvent]): Dataset[FunnelProgress] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState[FunnelTimes, FunnelProgress](
-        GroupStateTimeout.NoTimeout()) {
-        case (user, rows, state: GroupState[FunnelTimes]) =>
-          val (s, stage) = foldFunnel(
-            state.getOption.getOrElse(FunnelTimes(None, None, None)), rows)
-          state.update(s)
-          FunnelProgress(user, stage)
-      }
-  }
-
   // ------------------------------------------------------------------
-  // Funnel on transformWithState (Spark 4's typed-state successor to
-  // mapGroupsWithState) — same fold and exactness contract as
-  // funnelStream, with the three stage times in a typed ValueState
-  // handle instead of the whole-state case class. TimeMode.None: the
-  // fold is arrival-driven and the funnel never closes, only deepens —
-  // no timers of either kind (ProcessingTime mode measured as a
-  // continuous empty-batch trigger loop under processAllAvailable; None
-  // quiesces). Matches funnelStream's NoTimeout contract; the spec runs
-  // both implementations to identical per-user stages.
+  // In-order funnel on transformWithState: the three stage times in a
+  // typed ValueState handle. TimeMode.None: the fold is arrival-driven and
+  // the funnel never closes, only deepens — no timers of either kind
+  // (ProcessingTime mode measured as a continuous empty-batch trigger loop
+  // under processAllAvailable; None quiesces).
   // ------------------------------------------------------------------
   class FunnelStatefulProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[
@@ -736,8 +632,8 @@ object StreamingParity {
   }
 
   // ------------------------------------------------------------------
-  // OUT-OF-ORDER funnel — the watermark-buffered variant. funnelStream /
-  // funnelTransformWithState fold each micro-batch immediately, which
+  // OUT-OF-ORDER funnel — the watermark-buffered variant.
+  // funnelTransformWithState folds each micro-batch immediately, which
   // assumes cross-batch in-order arrival (an earlier-timestamped event
   // arriving in a LATER batch would be judged against state that already
   // folded newer events). This processor instead BUFFERS arrivals in a
@@ -960,16 +856,11 @@ object StreamingParity {
       .groupBy("day").agg(count(lit(1)).as("n_users"))
   }
 
-  /** The batch-mode contract both streaming forms must match (same CASE
-    * as RefQueries.q2WindowedMinComplete, over the same records).
+  /** The batch-mode contract both streaming forms must match: the gated
+    * RefQueries.q2Plan over the same records at SlotMs.
     */
   def q2Batch(events: Dataset[PwEvent]): DataFrame =
-    events.toDF()
-      .withColumn("ltw", expr(s"event_time div $SlotMs"))
-      .groupBy("word", "ltw", "port").agg(count(lit(1)).as("cnt"))
-      .groupBy("word", "ltw")
-      .agg(when(count(lit(1)) === PortsNum, min("cnt"))
-        .otherwise(lit(0L)).as("min_cnt"))
+    graft.operators.RefQueries.q2Plan(events.toDF(), SlotMs)
 
   // ------------------------------------------------------------------
   // Streaming exact dedup — the streaming arm of the dedup family

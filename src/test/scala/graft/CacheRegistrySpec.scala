@@ -50,16 +50,19 @@ class CacheRegistrySpec extends SparkSpec {
 
   test("cachedCheckpointed: releaseAll frees checkpoint blocks of every entry") {
     val dir = writeFixture(documents = Seq(doc(0, "a b"), doc(1, "c d")))
-    val a = CacheRegistry.cachedCheckpointed(spark, s"spec.cpA:$dir") {
-      graft.operators.Dedup.exactDedup(spark, dir)
+    // A session of its own: releaseAll drops every entry of the session it
+    // is given, and the shared session holds other suites' entries.
+    val s = spark.newSession()
+    val a = CacheRegistry.cachedCheckpointed(s, s"spec.cpA:$dir") {
+      graft.operators.Dedup.exactDedup(s, dir)
     }
-    val b = CacheRegistry.cachedCheckpointed(spark, s"spec.cpB:$dir") {
-      graft.operators.Dedup.exactDedup(spark, dir).limit(1)
+    val b = CacheRegistry.cachedCheckpointed(s, s"spec.cpB:$dir") {
+      graft.operators.Dedup.exactDedup(s, dir).limit(1)
     }
     a.count(); b.count()
     val ids = checkpointRddIds(a) ++ checkpointRddIds(b)
     assert(persisted(ids) === ids)
-    CacheRegistry.releaseAll(spark)
+    CacheRegistry.releaseAll(s)
     assert(persisted(ids).isEmpty,
       "releaseAll must unpersist all tracked checkpoint RDDs")
   }

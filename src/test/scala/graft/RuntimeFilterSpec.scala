@@ -25,16 +25,6 @@ import org.apache.spark.sql.functions._
   */
 class RuntimeFilterSpec extends SparkSpec {
 
-  private def withConfs(pairs: (String, String)*)(body: => Unit): Unit = {
-    val conf = spark.conf
-    val saved = pairs.map { case (k, _) => k -> conf.getOption(k) }
-    try { pairs.foreach { case (k, v) => conf.set(k, v) }; body }
-    finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
-
   test("dynamic partition pruning reaches the partitioned fact scan through the join") {
     val s = spark
     import s.implicits._

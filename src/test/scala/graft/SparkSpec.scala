@@ -59,6 +59,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     dir
   }
 
+  /** Runs `body` with the given session confs set on the shared session,
+    * then restores each key's prior value (or unsets it).
+    */
+  def withConfs[T](pairs: (String, String)*)(body: => T): T = {
+    val conf = spark.conf
+    val saved = pairs.map { case (k, _) => k -> conf.getOption(k) }
+    try { pairs.foreach { case (k, v) => conf.set(k, v) }; body }
+    finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
   def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
 }

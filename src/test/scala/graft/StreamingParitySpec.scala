@@ -3,7 +3,7 @@ package graft
 import graft.streaming.StreamingParity
 import graft.streaming.StreamingParity.{PwEvent, Q2Result}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{col, max, struct}
+import org.apache.spark.sql.functions.{col, expr, max, struct}
 import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming Q2 parity (SURVEY.md Phase 3): append-mode emission of
@@ -28,30 +28,12 @@ class StreamingParitySpec extends SparkSpec {
   private val expectedClosed = Set(
     Q2Result("A", 0L, 1L), Q2Result("B", 0L, 0L), Q2Result("A", 1L, 0L))
 
-  test("flatMapGroupsWithState emits each closed window exactly once") {
-    val s = spark
-    import s.implicits._
-    implicit val sq = s.sqlContext
-    val input = MemoryStream[PwEvent]
-    val query = StreamingParity.q2FlatMapGroups(input.toDS())
-      .writeStream.format("memory").queryName("q2_fmgs")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      input.addData(batch1); query.processAllAvailable()
-      input.addData(batch2); query.processAllAvailable()
-      input.addData(sentinel); query.processAllAvailable()
-      val got = s.table("q2_fmgs").as[Q2Result].collect()
-      assert(got.length === got.toSet.size, "duplicate emissions")
-      assert(got.toSet === expectedClosed)
-    } finally query.stop()
-  }
-
   test("windowed-aggregation form matches the batch contract on closed windows") {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
     val input = MemoryStream[PwEvent]
-    val query = StreamingParity.q2WindowedAgg(input.toDS())
+    val query = StreamingParity.q2WindowedAgg(Seq(input.toDF()))
       .writeStream.format("memory").queryName("q2_agg")
       .outputMode(OutputMode.Append()).start()
     try {
@@ -64,39 +46,12 @@ class StreamingParitySpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("flatMapGroupsWithState runs on the RocksDB state store (100 TB state path)") {
-    val s = spark
-    import s.implicits._
-    implicit val sq = s.sqlContext
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[PwEvent]
-      val query = StreamingParity.q2FlatMapGroups(input.toDS())
-        .writeStream.format("memory").queryName("q2_rocks")
-        .outputMode(OutputMode.Append()).start()
-      try {
-        input.addData(batch1); query.processAllAvailable()
-        input.addData(batch2); query.processAllAvailable()
-        input.addData(sentinel); query.processAllAvailable()
-        assert(s.table("q2_rocks").as[Q2Result].collect().toSet === expectedClosed)
-      } finally query.stop()
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("transformWithState (typed handles + event-time timers) matches the Q2 contract") {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     // transformWithState requires the RocksDB state store provider.
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs(Harness.RocksDbStateStore) {
       val input = MemoryStream[PwEvent]
       val query = StreamingParity.q2TransformWithState(input.toDS())
         .writeStream.format("memory").queryName("q2_tws")
@@ -109,9 +64,6 @@ class StreamingParitySpec extends SparkSpec {
         assert(got.length === got.toSet.size, "duplicate emissions")
         assert(got.toSet === expectedClosed)
       } finally query.stop()
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -575,10 +527,10 @@ class StreamingParitySpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val sfDir = "/root/testdata/sf0.001"
-    val prev = s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try {
-      val query = graft.streaming.EventStreams.q2DayWindowStream(s, sfDir)
+    withConfs("spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+      val query = StreamingParity.q2WindowedAgg(
+          Seq(graft.streaming.EventStreams.portWordStream(s, sfDir)),
+          graft.Shapes.LogicTimeSlotMs)
         .writeStream.format("memory").queryName("q2_file")
         .outputMode(OutputMode.Append()).start()
       try {
@@ -594,9 +546,6 @@ class StreamingParitySpec extends SparkSpec {
         assert(got === closed)
         assert(closed.nonEmpty)
       } finally query.stop()
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-      case None => s.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
     }
   }
 
@@ -643,7 +592,7 @@ class StreamingParitySpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val out = java.nio.file.Files.createTempDirectory("graft-ckpt-out").toString
     val input = MemoryStream[PwEvent]
-    def start() = StreamingParity.q2FlatMapGroups(input.toDS())
+    def start() = StreamingParity.q2TransformWithState(input.toDS())
       .writeStream.format("parquet")
       .option("path", out)
       .option("checkpointLocation", ckpt)
@@ -651,58 +600,24 @@ class StreamingParitySpec extends SparkSpec {
     def sinkRows() =
       try s.read.parquet(out).as[Q2Result].collect().toSeq
       catch { case _: Exception => Seq.empty[Q2Result] }
-    // First incarnation: ingest window 0 and advance the watermark past it.
-    val q1 = start()
-    try {
-      input.addData(batch1); q1.processAllAvailable()
-      input.addData(batch2); q1.processAllAvailable()
-    } finally q1.stop()
-    val afterFirst = sinkRows()
-    // Restart from the checkpoint; the file sink's commit log must carry
-    // over — closed windows are not re-emitted.
-    val q2 = start()
-    try {
-      input.addData(sentinel); q2.processAllAvailable()
-      val all = sinkRows()
-      assert(all.size === all.toSet.size, "duplicate emission across restart")
-      assert(all.toSet === expectedClosed)
-      assert(afterFirst.nonEmpty && afterFirst.toSet.subsetOf(expectedClosed))
-    } finally q2.stop()
-  }
-
-  test("transformWithState funnel matches the mapGroupsWithState funnel") {
-    import graft.streaming.StreamingParity.{UserEvent, FunnelProgress}
-    val s = spark
-    import s.implicits._
-    implicit val sq = s.sqlContext
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val b1 = Seq(
-        UserEvent(200, 1, "click"), UserEvent(100, 1, "view"),
-        UserEvent(200, 1, "purchase"),
-        UserEvent(100, 2, "click"), UserEvent(100, 2, "view"),
-        UserEvent(300, 3, "view"))
-      val b2 = Seq(UserEvent(600, 2, "purchase"), UserEvent(500, 4, "view"))
-      val input = MemoryStream[UserEvent]
-      val query = StreamingParity.funnelTransformWithState(input.toDS())
-        .writeStream.format("memory").queryName("funnel_tws")
-        .outputMode(OutputMode.Update()).start()
-      val got = try {
-        input.addData(b1); query.processAllAvailable()
-        input.addData(b2); query.processAllAvailable()
-        s.table("funnel_tws").as[FunnelProgress].collect()
-          .groupBy(_.user_id).map { case (u, ps) => u -> ps.map(_.stage).max }
-      } finally query.stop()
-      // Same per-user stages as the mapGroupsWithState fold on this data:
-      // user 1 full conversion (same-ts tie admitted), user 2 clicks at
-      // its first-view timestamp then purchases late-batch, users 3/4
-      // view only.
-      assert(got === Map(1L -> 3L, 2L -> 3L, 3L -> 1L, 4L -> 1L))
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    withConfs(Harness.RocksDbStateStore) {
+      // First incarnation: ingest window 0 and advance the watermark past it.
+      val q1 = start()
+      try {
+        input.addData(batch1); q1.processAllAvailable()
+        input.addData(batch2); q1.processAllAvailable()
+      } finally q1.stop()
+      val afterFirst = sinkRows()
+      // Restart from the checkpoint; the file sink's commit log must carry
+      // over — closed windows are not re-emitted.
+      val q2 = start()
+      try {
+        input.addData(sentinel); q2.processAllAvailable()
+        val all = sinkRows()
+        assert(all.size === all.toSet.size, "duplicate emission across restart")
+        assert(all.toSet === expectedClosed)
+        assert(afterFirst.nonEmpty && afterFirst.toSet.subsetOf(expectedClosed))
+      } finally q2.stop()
     }
   }
 
@@ -711,10 +626,7 @@ class StreamingParitySpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs(Harness.RocksDbStateStore) {
       // key 1 evolves across two triggers; key 2 bursts v1+v2 in ONE
       // batch (intra-batch fold); the v1 replay in b2 must emit nothing.
       val b1 = Seq(DimChange(1, 1, 1992, 100),
@@ -754,9 +666,6 @@ class StreamingParitySpec extends SparkSpec {
           assert(w(0).valid_to + 1 === w(1).valid_from)
         }
       }
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -806,10 +715,7 @@ class StreamingParitySpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs(Harness.RocksDbStateStore) {
       // key 3 carries its insert AND revision in one batch (intra-batch
       // fold → single emission at v2); key 2's b2 row and key 1's b3 row
       // are at-least-once replays that must not emit or downgrade.
@@ -842,9 +748,6 @@ class StreamingParitySpec extends SparkSpec {
         .select($"doc_id", $"w.version", $"w.fp").as[(Long, Long, Long)]
         .collect().map(t => t._1 -> (t._2, t._3)).toMap
       assert(finalByKey.map { case (k, d) => k -> ((d.version, d.fp)) } === batchWinners)
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -853,10 +756,7 @@ class StreamingParitySpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs(Harness.RocksDbStateStore) {
       // A replay SHUFFLED across batches: user 1's funnel arrives
       // purchase-first, click next batch, view last — the in-order
       // processors would misfold this (click@3000 judged before its
@@ -887,9 +787,6 @@ class StreamingParitySpec extends SparkSpec {
       // And the disorder was real: both funnel users fully convert.
       assert(got(1L) === 3L)
       assert(got(2L) === 3L)
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -898,12 +795,9 @@ class StreamingParitySpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = java.nio.file.Files.createTempDirectory("graft-scd2-ckpt").toString
     val out = java.nio.file.Files.createTempDirectory("graft-scd2-out").toString
-    try {
+    withConfs(Harness.RocksDbStateStore) {
       val input = MemoryStream[DimChange]
       def start() = StreamingParity.scd2Stream(input.toDS())
         .writeStream
@@ -931,9 +825,6 @@ class StreamingParitySpec extends SparkSpec {
         Scd2Row(1, 1, 100, 1992, 1993, 0),
         Scd2Row(1, 2, 200, 1994, 9999, 1)))
       assert(rows.size === 3) // open v1, close v1, open v2 — no replay rows
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -948,26 +839,28 @@ class StreamingParitySpec extends SparkSpec {
     // foreachBatch: the memory sink refuses checkpoint recovery and the
     // file sink refuses Update mode — foreachBatch is the standard
     // recovery-capable sink for a stateful update stream.
-    def start() = StreamingParity.funnelStream(input.toDS())
+    def start() = StreamingParity.funnelTransformWithState(input.toDS())
       .writeStream
       .foreachBatch { (df: org.apache.spark.sql.Dataset[FunnelProgress], _: Long) =>
         df.write.mode("append").parquet(out); ()
       }
       .option("checkpointLocation", ckpt)
       .outputMode(OutputMode.Update()).start()
-    // Incarnation 1: user 1 views. Stage 1 lands in the state store.
-    val q1 = start()
-    try { input.addData(Seq(UserEvent(100, 1, "view"))); q1.processAllAvailable() }
-    finally q1.stop()
-    // Incarnation 2 (fresh query, same checkpoint): the click must find
-    // the RESTORED t1 — without state recovery it would be rejected (no
-    // prior view) and the user would report stage 0.
-    val q2 = start()
-    val stages = try {
-      input.addData(Seq(UserEvent(200, 1, "click"))); q2.processAllAvailable()
-      s.read.parquet(out).as[FunnelProgress].collect()
-        .groupBy(_.user_id).map { case (u, ps) => u -> ps.map(_.stage).max }
-    } finally q2.stop()
+    val stages = withConfs(Harness.RocksDbStateStore) {
+      // Incarnation 1: user 1 views. Stage 1 lands in the state store.
+      val q1 = start()
+      try { input.addData(Seq(UserEvent(100, 1, "view"))); q1.processAllAvailable() }
+      finally q1.stop()
+      // Incarnation 2 (fresh query, same checkpoint): the click must find
+      // the RESTORED t1 — without state recovery it would be rejected (no
+      // prior view) and the user would report stage 0.
+      val q2 = start()
+      try {
+        input.addData(Seq(UserEvent(200, 1, "click"))); q2.processAllAvailable()
+        s.read.parquet(out).as[FunnelProgress].collect()
+          .groupBy(_.user_id).map { case (u, ps) => u -> ps.map(_.stage).max }
+      } finally q2.stop()
+    }
     assert(stages === Map(1L -> 2L))
   }
 
@@ -1015,7 +908,7 @@ class StreamingParitySpec extends SparkSpec {
     implicit val sq = s.sqlContext
     val a = MemoryStream[PwEvent]
     val b = MemoryStream[PwEvent]
-    val query = StreamingParity.q2TwoSources(a.toDS(), b.toDS())
+    val query = StreamingParity.q2WindowedAgg(Seq(a.toDF(), b.toDF()))
       .writeStream.format("memory").queryName("q2_two_sources")
       .outputMode(OutputMode.Append()).start()
     def emitted(): Set[Q2Result] = s.table("q2_two_sources").as[Q2Result].collect().toSet
@@ -1030,7 +923,7 @@ class StreamingParitySpec extends SparkSpec {
       // Source A races 10 windows ahead. Under the reference's trigger=min
       // contract (MyStateJoinUtils.scala:25-65) NOTHING may emit while B
       // lags at watermark 0 — under a max policy window 0 would close here
-      // (the anti-case the q2TwoSources scaladoc warns about).
+      // (the anti-case the q2WindowedAgg scaladoc warns about).
       a.addData(Seq(PwEvent(10500, 0, "SENT_A")))
       query.processAllAvailable()
       assert(emitted().isEmpty, "laggard source B must hold back every window")
@@ -1053,24 +946,29 @@ class StreamingParitySpec extends SparkSpec {
     implicit val sq = s.sqlContext
     val ckpt = java.nio.file.Files.createTempDirectory("graft-statestore").toString
     val input = MemoryStream[PwEvent]
-    val query = StreamingParity.q2FlatMapGroups(input.toDS())
-      .writeStream.format("memory").queryName("q2_state_snapshot")
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Append()).start()
-    try {
-      input.addData(batch1); query.processAllAvailable()
-      input.addData(batch2); query.processAllAvailable()
-    } finally query.stop()
+    withConfs(Harness.RocksDbStateStore) {
+      val query = StreamingParity.q2TransformWithState(input.toDS())
+        .writeStream.format("memory").queryName("q2_state_snapshot")
+        .option("checkpointLocation", ckpt)
+        .outputMode(OutputMode.Append()).start()
+      try {
+        input.addData(batch1); query.processAllAvailable()
+        input.addData(batch2); query.processAllAvailable()
+      } finally query.stop()
+    }
     // The reference exposes live per-window state via stateSnapshots()
     // (MyMapWithStateWithIndexDstream.scala:65-69); Structured Streaming's
     // analogue is the statestore batch source over the checkpoint. Keys are
-    // the groupByKey tuples (word, ltw); values the PortCounts buffers.
-    // flatMapGroupsWithState values wrap the user state beside the engine's
-    // timeout column: (groupState, timeoutTimestamp).
-    val state = s.read.format("statestore").load(ckpt)
+    // the groupByKey tuples (word, ltw); values the processor's
+    // `portCounts` MapState, read back unflattened as one map per key
+    // (the reader wraps each map key and value in a one-field struct).
+    val state = s.read.format("statestore")
+      .option("stateVarName", "portCounts")
+      .option("flattenCollectionTypes", "false")
+      .load(ckpt)
       .select(col("key._1").as("word"), col("key._2").as("ltw"),
-        col("value.groupState.counts").as("counts"))
-      .where(col("counts").isNotNull)
+        expr("transform_values(transform_keys(map_value, (k, v) -> k.value), " +
+          "(k, v) -> v.value)").as("counts"))
       .collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getAs[Map[Int, Long]]("counts"))
       .toMap
@@ -1450,16 +1348,18 @@ class StreamingParitySpec extends SparkSpec {
       UserEvent(400, 3, "purchase"), UserEvent(500, 4, "view"),
       UserEvent(600, 2, "purchase"))
     val input = MemoryStream[UserEvent]
-    val query = StreamingParity.funnelStream(input.toDS())
-      .writeStream.format("memory").queryName("funnel_stream")
-      .outputMode(OutputMode.Update()).start()
-    val finalStages = try {
-      input.addData(b1); query.processAllAvailable()
-      input.addData(b2); query.processAllAvailable()
-      // Stage is monotone per user, so the latest emission = the max.
-      s.table("funnel_stream").as[FunnelProgress].collect()
-        .groupBy(_.user_id).map { case (u, rs) => u -> rs.map(_.stage).max }
-    } finally query.stop()
+    val finalStages = withConfs(Harness.RocksDbStateStore) {
+      val query = StreamingParity.funnelTransformWithState(input.toDS())
+        .writeStream.format("memory").queryName("funnel_stream")
+        .outputMode(OutputMode.Update()).start()
+      try {
+        input.addData(b1); query.processAllAvailable()
+        input.addData(b2); query.processAllAvailable()
+        // Stage is monotone per user, so the latest emission = the max.
+        s.table("funnel_stream").as[FunnelProgress].collect()
+          .groupBy(_.user_id).map { case (u, rs) => u -> rs.map(_.stage).max }
+      } finally query.stop()
+    }
     assert(finalStages === Map(1L -> 3L, 2L -> 3L, 3L -> 1L, 4L -> 1L))
     // Twin contract: cumulative stage counts equal the BATCH funnel run
     // over the same events written as a fixture.
@@ -1482,7 +1382,7 @@ class StreamingParitySpec extends SparkSpec {
     import s.implicits._
     implicit val sq = s.sqlContext
     val input = MemoryStream[PwEvent]
-    val query = StreamingParity.q2WindowedAgg(input.toDS())
+    val query = StreamingParity.q2WindowedAgg(Seq(input.toDF()))
       .writeStream.format("memory").queryName("q2_late")
       .outputMode(OutputMode.Append()).start()
     try {
@@ -1502,10 +1402,7 @@ class StreamingParitySpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs(Harness.RocksDbStateStore) {
       val input = MemoryStream[ZxEvent]
       val query = StreamingParity.gapFillStream(input.toDS(), 1000L)
         .writeStream.format("memory").queryName("gap_tws")
@@ -1532,9 +1429,6 @@ class StreamingParitySpec extends SparkSpec {
           GapRow("b", 3, 10, 1), GapRow("b", 4, 10, 1), GapRow("b", 5, 10, 1),
           GapRow("b", 6, 10, 1), GapRow("b", 7, 10, 1), GapRow("b", 8, 10, 1)))
       } finally query.stop()
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -1557,10 +1451,7 @@ class StreamingParitySpec extends SparkSpec {
     val batch = Analytics.gapFill(spark, dir).collect()
       .map(r => GapRow(r.getAs[String]("z"), r.getAs[Long]("h"),
         r.getAs[Long]("filled_sum"), r.getAs[Long]("is_gap")))
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs(Harness.RocksDbStateStore) {
       val input = MemoryStream[ZxEvent]
       val query = StreamingParity.gapFillStream(input.toDS(), slot)
         .writeStream.format("memory").queryName("gap_parity")
@@ -1586,9 +1477,6 @@ class StreamingParitySpec extends SparkSpec {
         assert(batch.filterNot(g => g.h >= firstHour(g.z))
           .forall(g => g.filled_sum == 0 && g.is_gap == 1))
       } finally query.stop()
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -1597,10 +1485,7 @@ class StreamingParitySpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs(Harness.RocksDbStateStore) {
     val sfDir = "/root/testdata/sf0.001"
     val docs = Tables.documents(s, sfDir)
       .select("doc_id", "source", "text").collect()
@@ -1624,9 +1509,6 @@ class StreamingParitySpec extends SparkSpec {
       assert(got === want)
       assert(got.size === docs.length, "exactly one packed row per doc")
     } finally query.stop()
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -1635,10 +1517,7 @@ class StreamingParitySpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs(Harness.RocksDbStateStore) {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-pack-ckpt").toString
     val out = java.nio.file.Files.createTempDirectory("graft-pack-out").toString
     val input = MemoryStream[PackDoc]
@@ -1664,9 +1543,6 @@ class StreamingParitySpec extends SparkSpec {
     assert(rows.toSet === Set(
       PackedDoc(1, "web", 0, 3, 0, 0, 0),
       PackedDoc(2, "web", 0, 2, 3, 0, 3)))
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -1675,10 +1551,7 @@ class StreamingParitySpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs(Harness.RocksDbStateStore) {
     val input = MemoryStream[PackDoc]
     val query = StreamingParity.packStream(input.toDS())
       .writeStream.format("memory").queryName("pack_ooo")
@@ -1699,9 +1572,6 @@ class StreamingParitySpec extends SparkSpec {
         causes(ex).exists(c => c.getMessage != null &&
           c.getMessage.contains("replay contract is violated")))
     } finally query.stop()
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -1710,10 +1580,7 @@ class StreamingParitySpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs(Harness.RocksDbStateStore) {
     val input = MemoryStream[PackDoc]
     val query = StreamingParity.packStream(input.toDS())
       .writeStream.format("memory").queryName("pack_replay")
@@ -1738,9 +1605,6 @@ class StreamingParitySpec extends SparkSpec {
         PackedDoc(5, "web", 0, 3, 0, 0, 0),
         PackedDoc(6, "web", 0, 2, 3, 0, 3)))
     } finally query.stop()
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 }

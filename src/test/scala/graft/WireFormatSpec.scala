@@ -112,8 +112,7 @@ class WireFormatSpec extends SparkSpec {
     implicit val sq = s.sqlContext
     val input = MemoryStream[String]
     val parsed = WireFormat.parsePortWord(input.toDS())
-      .as[StreamingParity.PwEvent]
-    val query = StreamingParity.q2WindowedAgg(parsed)
+    val query = StreamingParity.q2WindowedAgg(Seq(parsed))
       .writeStream.format("memory").queryName("q2_wire")
       .outputMode(OutputMode.Append()).start()
     try {

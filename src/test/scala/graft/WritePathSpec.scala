@@ -43,9 +43,7 @@ class WritePathSpec extends SparkSpec {
     // under this flag (probing files-per-bucket is priced as expensive by
     // default); the layout below genuinely is one sorted file per bucket,
     // which is exactly the case the flag exists for.
-    val prevOrd = s.conf.getOption("spark.sql.legacy.bucketedTableScan.outputOrdering")
-    s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    try {
+    try withConfs("spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") {
       // The 100 TB form the epochShuffle scaladoc claims (Curation.scala
       // "write bucketed by shard with sortWithinPartitions(pos)"), proven:
       // the gated plan's output written bucketed by (epoch, shard) and
@@ -79,12 +77,6 @@ class WritePathSpec extends SparkSpec {
       assert(rows(reread.where(col("seq2") =!= col("seq"))).isEmpty,
         "reader sequence must equal the gated plan's seq")
       assert(reread.count() === Curation.epochShuffle(s, sfDir).count())
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      prevOrd match {
-        case Some(v) => s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", v)
-        case None => s.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
-      }
-    }
+    } finally s.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 }
