@@ -154,6 +154,16 @@ object StreamingParity {
     * watermark passage replaces the trigger scan; emitting on expiry
     * replaces the emit+evict path (state/src/main/scala/cluster/optimized/
     * HashJoin.scala:77-99).
+    *
+    * State is touched once per (key, port) per micro-batch, not once per
+    * row: the key's rows are first counted per port in memory, then each
+    * port seen costs one read (none on first contact) and one write — the
+    * Structured Streaming cost model of one state update per key per
+    * epoch. That matters most on a hot key, whose whole share of the
+    * batch lands on one task. There is no pre-shuffle partial combine by
+    * (word, window, port): the engine's late filter drops rows one at a
+    * time by event time at this operator, and a combined row would carry
+    * one event time for rows on both sides of the watermark.
     */
   class Q2StatefulProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[
@@ -178,9 +188,14 @@ object StreamingParity {
         rows: Iterator[(java.sql.Timestamp, String, Long, Int)],
         timers: org.apache.spark.sql.streaming.TimerValues): Iterator[Q2Result] = {
       val isFirstBatch = !counts.exists()
+      val perPort = scala.collection.mutable.HashMap.empty[Int, Long]
       rows.foreach { case (_, _, _, port) =>
-        counts.updateValue(port,
-          (if (counts.containsKey(port)) counts.getValue(port) else 0L) + 1L)
+        perPort(port) = perPort.getOrElse(port, 0L) + 1L
+      }
+      perPort.foreach { case (port, n) =>
+        val stored =
+          if (isFirstBatch || !counts.containsKey(port)) 0L else counts.getValue(port)
+        counts.updateValue(port, stored + n)
       }
       val end = (key._2 + 1) * SlotMs
       if (end <= timers.getCurrentWatermarkInMs()) {

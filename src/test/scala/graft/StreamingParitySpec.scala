@@ -67,6 +67,42 @@ class StreamingParitySpec extends SparkSpec {
     }
   }
 
+  test("transformWithState Q2 adds a later micro-batch to a hot key's open window state") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    // Word H, window 0: 3000 rows in one micro-batch, uneven over the
+    // ports (1800 / 900 / 300, times 1..600), then 710 more in the next
+    // (port 1 +10, port 2 +700, times 601..990: above the first batch's
+    // watermark of 600, so none is late). Per-port totals 1800 / 910 /
+    // 1000 → min 910: losing either batch changes the answer. Word C has
+    // state on ports 0 and 1 only when its port-2 row arrives.
+    def rows(n: Int, port: Int, word: String, t0: Long, span: Int): Seq[PwEvent] =
+      (0 until n).map(i => PwEvent(t0 + i % span, port, word))
+    val first = rows(1800, 0, "H", 1, 600) ++ rows(900, 1, "H", 1, 600) ++
+      rows(300, 2, "H", 1, 600) ++ rows(3, 0, "C", 100, 10) ++ rows(2, 1, "C", 200, 10)
+    val second = rows(10, 1, "H", 601, 390) ++ rows(700, 2, "H", 601, 390) ++
+      rows(1, 2, "C", 700, 1) ++ rows(4, 0, "H", 1500, 100)
+    withConfs(Harness.RocksDbStateStore) {
+      val input = MemoryStream[PwEvent]
+      val query = StreamingParity.q2TransformWithState(input.toDS())
+        .writeStream.format("memory").queryName("q2_tws_hot")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        input.addData(first); query.processAllAvailable()
+        input.addData(second); query.processAllAvailable()
+        input.addData(sentinel); query.processAllAvailable()
+        val got = s.table("q2_tws_hot").as[Q2Result].collect()
+        assert(got.length === got.toSet.size, "duplicate emissions")
+        val want = StreamingParity.q2Batch((first ++ second ++ sentinel).toDS())
+          .as[Q2Result].collect().toSet.filter(_.ltw < 10L)
+        assert(want === Set(
+          Q2Result("H", 0L, 910L), Q2Result("C", 0L, 1L), Q2Result("H", 1L, 0L)))
+        assert(got.toSet === want)
+      } finally query.stop()
+    }
+  }
+
   test("sliding hopping-window count stream matches the batch explode form on closed windows") {
     import graft.streaming.StreamingParity.ZxEvent
     val s = spark
@@ -1428,6 +1464,46 @@ class StreamingParitySpec extends SparkSpec {
           GapRow("b", 2, 10, 0),
           GapRow("b", 3, 10, 1), GapRow("b", 4, 10, 1), GapRow("b", 5, 10, 1),
           GapRow("b", 6, 10, 1), GapRow("b", 7, 10, 1), GapRow("b", 8, 10, 1)))
+      } finally query.stop()
+    }
+  }
+
+  test("gap-fill stream sums an open hour's rows within and across micro-batches") {
+    import graft.streaming.StreamingParity.{GapRow, ZxEvent}
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    withConfs(Harness.RocksDbStateStore) {
+      val input = MemoryStream[ZxEvent]
+      val query = StreamingParity.gapFillStream(input.toDS(), 1000L)
+        .writeStream.format("memory").queryName("gap_sum")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        // key a: three rows in slot 1 (watermark → 1300, slot 1 open) ...
+        input.addData(Seq(ZxEvent(1100, "a", 2), ZxEvent(1200, "a", 3),
+          ZxEvent(1300, "a", 4)))
+        query.processAllAvailable()
+        // ... two more for the still-open slot 1 and one in slot 2; key b
+        // first arrives here, two rows in slot 1 (watermark → 2500) ...
+        input.addData(Seq(ZxEvent(1400, "a", 5), ZxEvent(1500, "a", 6),
+          ZxEvent(2500, "a", 1), ZxEvent(1450, "b", 4), ZxEvent(1460, "b", 5)))
+        query.processAllAvailable()
+        // ... and two more for a's still-open slot 2
+        input.addData(Seq(ZxEvent(2600, "a", 10), ZxEvent(2700, "a", 1)))
+        query.processAllAvailable()
+        // sentinel advances the watermark to 9999 → slots ≤ 8 close
+        input.addData(Seq(ZxEvent(9999, "zz", 1)))
+        query.processAllAvailable()
+        val got = s.table("gap_sum").as[GapRow].collect()
+        assert(got.length === got.toSet.size, "duplicate emissions")
+        assert(got.toSet === Set(
+          GapRow("a", 1, 20, 0), GapRow("a", 2, 12, 0),
+          GapRow("a", 3, 12, 1), GapRow("a", 4, 12, 1), GapRow("a", 5, 12, 1),
+          GapRow("a", 6, 12, 1), GapRow("a", 7, 12, 1), GapRow("a", 8, 12, 1),
+          GapRow("b", 1, 9, 0),
+          GapRow("b", 2, 9, 1), GapRow("b", 3, 9, 1), GapRow("b", 4, 9, 1),
+          GapRow("b", 5, 9, 1), GapRow("b", 6, 9, 1), GapRow("b", 7, 9, 1),
+          GapRow("b", 8, 9, 1)))
       } finally query.stop()
     }
   }
