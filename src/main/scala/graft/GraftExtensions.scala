@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.{LongVectorDot, MinHashSigs, PolyHash, SimHash64, WordShingleHashes}
+import graft.streaming.LocalCheckpointFileManager
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -65,7 +66,19 @@ object GraftExtensions {
         "minhash_sigs(str, w) - 32-permutation MinHash signature over w-gram shingles"),
       (args: Seq[Expression]) => MinHashSigs(args.head, intArg(args(1), "w"))))
 
-  /** Registers the graft functions into an already-running session. */
+  /** Registers the graft functions into an already-running session, and
+    * sets two session defaults.
+    *
+    * Streaming checkpoints go through [[LocalCheckpointFileManager]] unless
+    * the session already names a checkpoint file manager (a user's own
+    * manager wins). The production reason: a Spark binary distribution
+    * ships no libhadoop, so Hadoop's local file system forks `chmod` and
+    * `readlink` for every checkpoint file it writes. Every `local[*]` or
+    * single-node job that checkpoints to a local path pays about 46 process
+    * starts per trigger, at any data scale; on Q2 that fork cost was most of
+    * the per-trigger floor that sets emit latency. Non-`file:` checkpoints
+    * keep Spark's default manager.
+    */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     registrations.foreach { case (id, inf, b) =>
       org.apache.spark.sql.graftbridge.CatalystBridge
@@ -83,5 +96,8 @@ object GraftExtensions {
     try spark.conf.set(
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     catch { case _: Throwable => () }
+    if (spark.conf.getOption(LocalCheckpointFileManager.ConfKey).isEmpty)
+      spark.conf.set(LocalCheckpointFileManager.ConfKey,
+        classOf[LocalCheckpointFileManager].getName)
   }
 }

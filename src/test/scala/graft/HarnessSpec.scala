@@ -1,6 +1,8 @@
 package graft
 
+import graft.streaming.LocalCheckpointFileManager
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.types.LongType
 
 /** The shared session contract and query runner of [[Harness]]. The
@@ -14,12 +16,12 @@ class HarnessSpec extends SparkSpec {
   private val defaultCpus = 3
   private val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
 
-  private def withHarnessSession(f: SparkSession => Unit): Unit = {
+  private def withHarnessSession(extra: (String, String)*)(f: SparkSession => Unit): Unit = {
     val shared = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s = Harness.session(defaultCpus)
+      val s = Harness.session(defaultCpus, extra: _*)
       assert(s ne shared, "Harness.session must build a new session here")
       f(s)
     } finally {
@@ -29,7 +31,7 @@ class HarnessSpec extends SparkSpec {
   }
 
   test("session: partitions equal cpus, UTC, nanosAsLong, cached-plan repartition, poly_hash") {
-    withHarnessSession { s =>
+    withHarnessSession() { s =>
       assert(s.conf.get("spark.sql.shuffle.partitions") === cpus)
       assert(s.conf.get("spark.sql.session.timeZone") === "UTC")
       assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
@@ -37,6 +39,17 @@ class HarnessSpec extends SparkSpec {
       val h = s.sql("SELECT poly_hash('abc') AS h")
       assert(h.schema("h").dataType === LongType)
       assert(h.collect().length === 1)
+    }
+  }
+
+  test("session: checkpoints go through the local manager unless the session names one") {
+    withHarnessSession() { s =>
+      assert(s.conf.get(LocalCheckpointFileManager.ConfKey) ===
+        classOf[LocalCheckpointFileManager].getName)
+    }
+    val own = classOf[FileSystemBasedCheckpointFileManager].getName
+    withHarnessSession(LocalCheckpointFileManager.ConfKey -> own) { s =>
+      assert(s.conf.get(LocalCheckpointFileManager.ConfKey) === own)
     }
   }
 

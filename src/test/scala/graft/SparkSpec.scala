@@ -72,6 +72,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Runs `body` with `key` unset on the shared session, then restores it. */
+  def withoutConf[T](key: String)(body: => T): T = {
+    val saved = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    try body finally saved.foreach(spark.conf.set(key, _))
+  }
+
   def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamingParity
+import graft.streaming.{LocalCheckpointFileManager, StreamingParity}
 import graft.streaming.StreamingParity.{PwEvent, Q2Result}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, expr, max, struct}
@@ -976,6 +976,66 @@ class StreamingParitySpec extends SparkSpec {
     } finally query.stop()
   }
 
+  /** Q2's keyed state in a checkpoint, read with Spark's stock checkpoint
+    * file manager. The reference exposes live per-window state via
+    * stateSnapshots() (MyMapWithStateWithIndexDstream.scala:65-69);
+    * Structured Streaming's analogue is the statestore batch source over
+    * the checkpoint. Keys are the groupByKey tuples (word, ltw); values the
+    * processor's `portCounts` MapState, read back unflattened as one map
+    * per key (the reader wraps each map key and value in a one-field
+    * struct).
+    */
+  private def portCountsState(ckpt: String): Map[(String, Long), Map[Int, Long]] =
+    withoutConf(LocalCheckpointFileManager.ConfKey) {
+      spark.read.format("statestore")
+        .option("stateVarName", "portCounts")
+        .option("flattenCollectionTypes", "false")
+        .load(ckpt)
+        .select(col("key._1").as("word"), col("key._2").as("ltw"),
+          expr("transform_values(transform_keys(map_value, (k, v) -> k.value), " +
+            "(k, v) -> v.value)").as("counts"))
+        .collect()
+        .map(r => (r.getString(0), r.getLong(1)) -> r.getAs[Map[Int, Long]]("counts"))
+        .toMap
+    }
+
+  test("Q2 on the local checkpoint manager recovers across a restart; stock readers read it") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-local-ckpt").toString
+    val out = java.nio.file.Files.createTempDirectory("graft-local-ckpt-out").toString
+    // Window 1 of A gets its port-0 row before the restart and its port-1
+    // and port-2 rows after: min 1 only if the restored state held port 0.
+    val batch3 = Seq(PwEvent(1100, 1, "A"), PwEvent(1200, 2, "A"),
+      PwEvent(1300, 2, "A"), PwEvent(2100, 0, "B"))
+    val input = MemoryStream[PwEvent]
+    def start() = StreamingParity.q2TransformWithState(input.toDS())
+      .writeStream.format("parquet")
+      .option("path", out)
+      .option("checkpointLocation", ckpt)
+      .outputMode(OutputMode.Append()).start()
+    def run(batches: Seq[PwEvent]*): Unit =
+      withConfs(Harness.RocksDbStateStore, LocalCheckpointFileManager.ConfKey ->
+          classOf[LocalCheckpointFileManager].getName) {
+        val q = start()
+        try batches.foreach { b => input.addData(b); q.processAllAvailable() }
+        finally q.stop()
+      }
+    run(batch1, batch2)
+    assert(portCountsState(ckpt).get(("A", 1L)) === Some(Map(0 -> 1L)))
+    run(batch3, sentinel)
+    val got = s.read.parquet(out).as[Q2Result].collect().toSeq
+    assert(got.size === got.toSet.size, "duplicate emission across restart")
+    val want = StreamingParity.q2Batch((batch1 ++ batch2 ++ batch3 ++ sentinel).toDS())
+      .as[Q2Result].collect().toSet.filter(_.ltw < 10L)
+    assert(want.contains(Q2Result("A", 1L, 1L)))
+    assert(got.toSet === want)
+    val state = portCountsState(ckpt)
+    assert(state.get(("SENTINEL", 10L)) === Some(Map(0 -> 1L)))
+    assert(state.keySet.subsetOf(want.map(r => (r.word, r.ltw)) + (("SENTINEL", 10L))))
+  }
+
   test("checkpointed state reads back via the statestore source (C5 contract)") {
     val s = spark
     import s.implicits._
@@ -992,22 +1052,7 @@ class StreamingParitySpec extends SparkSpec {
         input.addData(batch2); query.processAllAvailable()
       } finally query.stop()
     }
-    // The reference exposes live per-window state via stateSnapshots()
-    // (MyMapWithStateWithIndexDstream.scala:65-69); Structured Streaming's
-    // analogue is the statestore batch source over the checkpoint. Keys are
-    // the groupByKey tuples (word, ltw); values the processor's
-    // `portCounts` MapState, read back unflattened as one map per key
-    // (the reader wraps each map key and value in a one-field struct).
-    val state = s.read.format("statestore")
-      .option("stateVarName", "portCounts")
-      .option("flattenCollectionTypes", "false")
-      .load(ckpt)
-      .select(col("key._1").as("word"), col("key._2").as("ltw"),
-        expr("transform_values(transform_keys(map_value, (k, v) -> k.value), " +
-          "(k, v) -> v.value)").as("counts"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)) -> r.getAs[Map[Int, Long]]("counts"))
-      .toMap
+    val state = portCountsState(ckpt)
     // Which of window 0's groups already timed out depends on whether an
     // empty batch ran after the watermark advanced; window 1 (end 2000 >
     // final watermark 1010) MUST still be open with A's single port-0 row.
