@@ -65,9 +65,10 @@ object EventStreams {
   *      window). The only Q2 stream with map-side partial aggregation,
   *      and the only one that runs on the default state store.
   *   2. [[q2TransformWithState]] — the reference-shaped form: explicit
-  *      keyed state (per-port counts in a MapState) with one event-time
-  *      timer per (word, window), emission exactly at watermark passage —
-  *      the engine-managed analogue of C4's trigger-scan-emit-evict loop.
+  *      keyed state (one ValueState of per-port counts per (word,
+  *      window)) with one event-time timer per (word, window), emission
+  *      exactly at watermark passage — the engine-managed analogue of
+  *      C4's trigger-scan-emit-evict loop.
   *
   * Both are asserted equal to the batch form [[q2Batch]] (the gated
   * RefQueries.q2Plan) by StreamingParitySpec (MemoryStream fixtures from
@@ -145,57 +146,63 @@ object StreamingParity {
       .flatMap(_.stateOperators)
       .map(_.numRowsDroppedByWatermark).sum
 
+  /** One (word, window)'s per-port counts: `counts(i)` rows seen on
+    * `ports(i)`, ports distinct. Two arrays, not a `Map[Int, Long]`:
+    * transformWithState checks each state schema through Avro, whose map
+    * keys must be strings, so a map with int keys fails the query on its
+    * first trigger.
+    */
+  case class PortCounts(ports: Array[Int], counts: Array[Long])
+
+  /** Built once per JVM: an encoder built in `init()` runs Scala
+    * reflection in every task of every trigger.
+    */
+  lazy val portCountsEncoder: org.apache.spark.sql.Encoder[PortCounts] =
+    org.apache.spark.sql.Encoders.product[PortCounts]
+
   /** Reference-shaped Q2 on the transformWithState API (typed state
     * handles + first-class event-time timers, RocksDB-only): the
     * engine-native analogue of the reference's forked mapWithState
     * operator (C4), whose state-scan-at-trigger loop becomes
-    * handleExpiredTimer and whose per-key per-port counts become a
-    * MapState handle. The timer replaces punctuation control rows;
-    * watermark passage replaces the trigger scan; emitting on expiry
-    * replaces the emit+evict path (state/src/main/scala/cluster/optimized/
-    * HashJoin.scala:77-99).
+    * handleExpiredTimer and whose per-key per-port counts become one
+    * [[PortCounts]] ValueState per (word, window). The timer replaces
+    * punctuation control rows; watermark passage replaces the trigger
+    * scan; emitting on expiry replaces the emit+evict path
+    * (state/src/main/scala/cluster/optimized/HashJoin.scala:77-99).
     *
-    * State is touched once per (key, port) per micro-batch, not once per
-    * row: the key's rows are first counted per port in memory, then each
-    * port seen costs one read (none on first contact) and one write — the
-    * Structured Streaming cost model of one state update per key per
-    * epoch. That matters most on a hot key, whose whole share of the
-    * batch lands on one task. There is no pre-shuffle partial combine by
-    * (word, window, port): the engine's late filter drops rows one at a
-    * time by event time at this operator, and a combined row would carry
-    * one event time for rows on both sides of the watermark.
+    * Cost model, per key: one state get and one put per micro-batch (the
+    * key's rows are counted per port in memory in between), one get and
+    * one delete at close; no RocksDB prefix scan anywhere — the Structured
+    * Streaming cost model of one state update per key per epoch. That
+    * matters most on a hot key, whose whole share of the batch lands on
+    * one task. The engine still builds the state handle once per task per
+    * trigger in `init()`; its value encoder is [[portCountsEncoder]].
+    * There is no pre-shuffle partial combine by (word, window, port): the
+    * engine's late filter drops rows one at a time by event time at this
+    * operator, and a combined row would carry one event time for rows on
+    * both sides of the watermark.
     */
   class Q2StatefulProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[
         (String, Long), (java.sql.Timestamp, String, Long, Int), Q2Result] {
     import org.apache.spark.sql.streaming.{TimeMode, TTLConfig}
-    import org.apache.spark.sql.{Encoders, streaming}
+    import org.apache.spark.sql.streaming
 
-    @transient private var counts: streaming.MapState[Int, Long] = _
+    @transient private var portCounts: streaming.ValueState[PortCounts] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      counts = getHandle.getMapState[Int, Long](
-        "portCounts", Encoders.scalaInt, Encoders.scalaLong, TTLConfig.NONE)
-
-    private def closedResult(key: (String, Long)): Q2Result = {
-      val m = counts.iterator().toMap
-      counts.clear()
-      Q2Result(key._1, key._2, Shapes.minIfComplete(m.values))
-    }
+      portCounts = getHandle.getValueState[PortCounts](
+        "portCounts", portCountsEncoder, TTLConfig.NONE)
 
     override def handleInputRows(
         key: (String, Long),
         rows: Iterator[(java.sql.Timestamp, String, Long, Int)],
         timers: org.apache.spark.sql.streaming.TimerValues): Iterator[Q2Result] = {
-      val isFirstBatch = !counts.exists()
-      val perPort = scala.collection.mutable.HashMap.empty[Int, Long]
+      val stored = portCounts.get() // null: first contact
+      val counts = scala.collection.mutable.HashMap.empty[Int, Long]
+      if (stored != null) counts ++= stored.ports.iterator.zip(stored.counts)
       rows.foreach { case (_, _, _, port) =>
-        perPort(port) = perPort.getOrElse(port, 0L) + 1L
-      }
-      perPort.foreach { case (port, n) =>
-        val stored =
-          if (isFirstBatch || !counts.containsKey(port)) 0L else counts.getValue(port)
-        counts.updateValue(port, stored + n)
+        counts(port) = counts.getOrElse(port, 0L) + 1L
       }
       val end = (key._2 + 1) * SlotMs
       if (end <= timers.getCurrentWatermarkInMs()) {
@@ -204,13 +211,16 @@ object StreamingParity {
         // this window's first rows for some key (they clear the LATE
         // filter, which lags one batch) while the watermark has moved past
         // the window. A timer at `end` would be in the past, so close the
-        // window now: emit once, keep no state. Any still-later row for
-        // this window is dropped by the engine's late filter.
-        Iterator.single(closedResult(key))
+        // window now: emit once, keep no state. A timer registered by an
+        // earlier batch still fires and finds no state. Any still-later
+        // row for this window is dropped by the engine's late filter.
+        if (stored != null) portCounts.clear()
+        Iterator.single(Q2Result(key._1, key._2, Shapes.minIfComplete(counts.values)))
       } else {
+        portCounts.update(PortCounts(counts.keys.toArray, counts.values.toArray))
         // One event-time timer per key closes the window; register only on
         // first contact (re-registration would duplicate expirations).
-        if (isFirstBatch) getHandle.registerTimer(end)
+        if (stored == null) getHandle.registerTimer(end)
         Iterator.empty
       }
     }
@@ -218,9 +228,15 @@ object StreamingParity {
     override def handleExpiredTimer(
         key: (String, Long),
         timers: org.apache.spark.sql.streaming.TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Q2Result] =
+        info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Q2Result] = {
       // State may already be gone if the late-close path fired first.
-      if (counts.exists()) Iterator.single(closedResult(key)) else Iterator.empty
+      val stored = portCounts.get()
+      if (stored == null) Iterator.empty
+      else {
+        portCounts.clear()
+        Iterator.single(Q2Result(key._1, key._2, Shapes.minIfComplete(stored.counts)))
+      }
+    }
   }
 
   def q2TransformWithState(events: Dataset[PwEvent]): Dataset[Q2Result] = {

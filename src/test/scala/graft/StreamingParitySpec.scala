@@ -981,19 +981,16 @@ class StreamingParitySpec extends SparkSpec {
     * stateSnapshots() (MyMapWithStateWithIndexDstream.scala:65-69);
     * Structured Streaming's analogue is the statestore batch source over
     * the checkpoint. Keys are the groupByKey tuples (word, ltw); values the
-    * processor's `portCounts` MapState, read back unflattened as one map
-    * per key (the reader wraps each map key and value in a one-field
-    * struct).
+    * processor's `portCounts` ValueState, its two parallel arrays zipped
+    * back into one map per key.
     */
   private def portCountsState(ckpt: String): Map[(String, Long), Map[Int, Long]] =
     withoutConf(LocalCheckpointFileManager.ConfKey) {
       spark.read.format("statestore")
         .option("stateVarName", "portCounts")
-        .option("flattenCollectionTypes", "false")
         .load(ckpt)
         .select(col("key._1").as("word"), col("key._2").as("ltw"),
-          expr("transform_values(transform_keys(map_value, (k, v) -> k.value), " +
-            "(k, v) -> v.value)").as("counts"))
+          expr("map_from_arrays(value.ports, value.counts)").as("counts"))
         .collect()
         .map(r => (r.getString(0), r.getLong(1)) -> r.getAs[Map[Int, Long]]("counts"))
         .toMap
@@ -1061,6 +1058,89 @@ class StreamingParitySpec extends SparkSpec {
     assert(state(("A", 1L)) === Map(0 -> 1L))
     state.get(("A", 0L)).foreach(c => assert(c === Map(0 -> 2L, 1 -> 1L, 2 -> 1L)))
     state.get(("B", 0L)).foreach(c => assert(c === Map(0 -> 1L, 1 -> 1L)))
+  }
+
+  test("transformWithState Q2 closes a window late in one batch and counts distinct ports") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    // The reference's ports. Without no-data batches, a data batch's late
+    // filter uses the watermark the previous batch ran with, its eviction
+    // watermark (the processor's) the one the previous batch produced.
+    // Batch 2 below runs with late filter 1200 and eviction watermark
+    // 5000, so its window-1 rows (end 2000) get in and must close in the
+    // same batch: A on state from batch 0, L and F on first contact. F
+    // has a fourth distinct port: incomplete, 0. K closes by its timer,
+    // S and X too.
+    val (p1, p2, p3, p4) = (10105, 10107, 10109, 10111)
+    val batches = Seq(
+      Seq(PwEvent(1100, p1, "A"), PwEvent(1150, p2, "A"), PwEvent(100, p1, "K"),
+        PwEvent(110, p2, "K"), PwEvent(120, p3, "K"), PwEvent(1200, p1, "S")),
+      Seq(PwEvent(5000, p1, "X")),
+      Seq(PwEvent(1500, p3, "A"), PwEvent(1600, p3, "A"),
+        PwEvent(1300, p1, "L"), PwEvent(1400, p2, "L"), PwEvent(1500, p3, "L")) ++
+        Seq(p1, p2, p3, p4, p1, p2, p3, p4).map(PwEvent(1300, _, "F")),
+      Seq(PwEvent(10500, p1, "SENTINEL")),
+      Seq(PwEvent(10600, p1, "SENTINEL")))
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-late-close").toString
+    withConfs(Harness.RocksDbStateStore,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+      val input = MemoryStream[PwEvent]
+      val query = StreamingParity.q2TransformWithState(input.toDS())
+        .writeStream.format("memory").queryName("q2_tws_late_close")
+        .option("checkpointLocation", ckpt)
+        .outputMode(OutputMode.Append()).start()
+      try batches.foreach { b => input.addData(b); query.processAllAvailable() }
+      finally query.stop()
+    }
+    val got = s.table("q2_tws_late_close").as[Q2Result].collect().toSeq
+    val want = StreamingParity.q2Batch(batches.flatten.toDS())
+      .as[Q2Result].collect().toSet.filter(_.ltw < 10L)
+    assert(want === Set(Q2Result("K", 0L, 1L), Q2Result("A", 1L, 1L),
+      Q2Result("S", 1L, 0L), Q2Result("L", 1L, 1L), Q2Result("F", 1L, 0L),
+      Q2Result("X", 5L, 0L)))
+    assert(got.size === got.toSet.size, "duplicate emissions")
+    assert(got.toSet === want)
+    assert(portCountsState(ckpt).keySet === Set(("SENTINEL", 10L)))
+  }
+
+  test("Q2 refuses to restart from a checkpoint of the old MapState layout") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-old-layout").toString
+    val out = java.nio.file.Files.createTempDirectory("graft-old-layout-out").toString
+    val input = MemoryStream[PwEvent]
+    // q2TransformWithState's plan, with the processor passed in.
+    def start(processor: org.apache.spark.sql.streaming.StatefulProcessor[
+        (String, Long), (java.sql.Timestamp, String, Long, Int), Q2Result]) =
+      input.toDF()
+        .withColumn("event_ts", expr("timestamp_millis(event_time)"))
+        .withColumn("ltw", expr(s"event_time div ${StreamingParity.SlotMs}"))
+        .select(col("event_ts"), col("word"), col("ltw"), col("port"))
+        .withWatermark("event_ts", "0 milliseconds")
+        .as[(java.sql.Timestamp, String, Long, Int)]
+        .groupByKey { case (_, word, ltw, _) => (word, ltw) }
+        .transformWithState(processor,
+          org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .outputMode(OutputMode.Append()).start()
+    withConfs(Harness.RocksDbStateStore) {
+      val old = start(new StreamingParitySpec.MapStateQ2Processor)
+      try { input.addData(batch1); old.processAllAvailable() }
+      finally old.stop()
+      val restarted = start(new StreamingParity.Q2StatefulProcessor)
+      val err = try {
+        input.addData(batch2 ++ sentinel)
+        intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+          restarted.processAllAvailable())
+      } finally restarted.stop()
+      // The state schema check sees the MapState's (key, port) composite
+      // key where the ValueState keeps (key) alone.
+      assert(err.getMessage.contains("STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"), err.getMessage)
+    }
   }
 
   test("per-trigger Q1: each micro-batch equals the batch plan on that batch's rows") {
@@ -1726,6 +1806,35 @@ class StreamingParitySpec extends SparkSpec {
         PackedDoc(5, "web", 0, 3, 0, 0, 0),
         PackedDoc(6, "web", 0, 2, 3, 0, 3)))
     } finally query.stop()
+    }
+  }
+}
+
+object StreamingParitySpec {
+  /** The `portCounts` layout before the ValueState change: a MapState of
+    * port -> count under the same state variable name. Kept only to write
+    * an old-layout checkpoint; nothing closes its windows.
+    */
+  class MapStateQ2Processor
+      extends org.apache.spark.sql.streaming.StatefulProcessor[
+        (String, Long), (java.sql.Timestamp, String, Long, Int), Q2Result] {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.streaming.{MapState, TimeMode, TimerValues, TTLConfig}
+
+    @transient private var counts: MapState[Int, Long] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      counts = getHandle.getMapState[Int, Long](
+        "portCounts", Encoders.scalaInt, Encoders.scalaLong, TTLConfig.NONE)
+
+    override def handleInputRows(key: (String, Long),
+        rows: Iterator[(java.sql.Timestamp, String, Long, Int)],
+        timers: TimerValues): Iterator[Q2Result] = {
+      if (!counts.exists()) getHandle.registerTimer((key._2 + 1) * StreamingParity.SlotMs)
+      rows.foreach { case (_, _, _, port) =>
+        counts.updateValue(port, (if (counts.containsKey(port)) counts.getValue(port) else 0L) + 1L)
+      }
+      Iterator.empty
     }
   }
 }
