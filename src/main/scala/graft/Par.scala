@@ -63,10 +63,6 @@ object Par {
     * untouched otherwise (the cluster-scale branch).
     */
   def widen(spark: SparkSession, df: DataFrame, path: String, keys: Column*): DataFrame = {
-    // Session-conf kill switch (`spark.graft.par.widen=off`): lets an
-    // operator pin the bare-scan plans, and lets a dev session A/B the
-    // two forms interleaved under the same JVM/load window.
-    if (spark.conf.getOption("spark.graft.par.widen").contains("off")) return df
     val target = spark.sparkContext.defaultParallelism
     if (scanTasks(spark, path) < target) df.repartition(target, keys: _*)
     else df
@@ -101,10 +97,7 @@ object Par {
     * many partitions — the count follows the data at every scale.
     */
   def rightsize(df: DataFrame, keys: Column*): DataFrame =
-    // Same dev kill switch as widen (`spark.graft.par.rightsize=off`):
-    // interleaved A/B of the persist-time exchange under one JVM.
-    if (df.sparkSession.conf.getOption("spark.graft.par.rightsize").contains("off")) df
-    else df.hint("rebalance", keys: _*)
+    df.hint("rebalance", keys: _*)
 
   /** [[widen]] for a standard `$sfDir/<table>.parquet` fixture table. */
   def widenTable(spark: SparkSession, df: DataFrame, sfDir: String,

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Parity._
-import graft.operators.{Analytics, Curation, Dedup, NullSemantics, Retrieval, Similarity, Sketches, TextAnalysis}
+import graft.operators.{Analytics, Curation, Dedup, NullSemantics, Similarity, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The SQL face of the reference query family: every q1–q4 shape as a
@@ -216,10 +216,7 @@ object SqlQueries {
     .map(b => s"SELECT doc_id, sig, $b AS band, ${bandKeySpark("sig", b)} AS bkey FROM sigs")
     .mkString("\n  UNION ALL ")
 
-  /** The d_minhash_lsh_pairs text, named so the edit-distance
-    * refinement (Sketches) can inject it as its candidate CTE — one
-    * candidate-generation text, two consumers.
-    */
+  /** The d_minhash_lsh_pairs text. */
   private val minhashLshPairsSparkSql: String =
     s"""WITH sigs AS (
        |  SELECT doc_id, sig FROM (
@@ -258,10 +255,7 @@ object SqlQueries {
        |      FROM documents)
        |GROUP BY doc_id, pmod(h, ${TextAnalysis.FeatureDims})""".stripMargin
 
-  /** The s_text_cosine_topk text, named so the RRF hybrid (Retrieval)
-    * can inject it as its semantic-ranker CTE — one ranker text, two
-    * consumers.
-    */
+  /** The s_text_cosine_topk text. */
   private val textCosineTopKSparkSql: String =
     s"""WITH fv AS ($featureHashSparkSql),
        |norms AS (SELECT doc_id, sum(w * w) AS nrm FROM fv GROUP BY doc_id),
@@ -481,8 +475,6 @@ object SqlQueries {
          |JOIN sizes sa ON sa.doc_id = id_a
          |JOIN sizes sb ON sb.doc_id = id_b
          |WHERE inter * ${Dedup.JaccDen} > (sa.n + sb.n - inter) * ${Dedup.JaccNum}""".stripMargin,
-    "d_adaptive_jaccard_decision" ->
-      Dedup.adaptiveJaccardDecisionSqlOver(shingleRelSparkSql),
     "d_containment_pairs" ->
       s"""WITH sh AS ($shingleRelSparkSql),
          |dfreq AS (SELECT sh, count(*) AS df FROM sh GROUP BY sh),
@@ -608,23 +600,13 @@ object SqlQueries {
     // (year(), TIMESTAMP literals, DECIMAL casts, a correlated scalar
     // subquery Catalyst decorrelates to the DataFrame form's agg+join),
     // so one text serves both engines.
-    // The six round-14 closing shapes (Q6/Q9/Q10/Q12/Q13/Q16 — the full
-    // 22-shape TPC-H sweep): five texts are dialect-neutral; Q12 has a
-    // Spark twin because datediff argument order differs between engines.
-    // r15: the four partsupp consumers (Q2/Q9/Q11/Q16) and a_partsupp
-    // itself take Spark twins because the derived-partsupp CTE dialects
-    // diverge (DIV vs //, sequence/explode vs generate_series/unnest).
+    // The dialect-neutral round-14 closing shapes of the 22-shape TPC-H
+    // sweep: their oracle texts serve both engines too.
     "a_forecast_revenue" -> graft.operators.Analytics.forecastRevenueSql,
-    "a_nation_profit" -> graft.operators.Analytics.nationProfitSparkSql,
-    "a_partsupp" -> graft.operators.Analytics.partsuppBuildSparkSql,
     "a_returned_revenue" -> graft.operators.Analytics.returnedRevenueSql,
-    "a_ship_delay_priority" -> graft.operators.Analytics.shipDelayPrioritySparkSql,
     "a_order_count_distribution" -> graft.operators.Analytics.orderCountDistributionSql,
-    "a_supplier_variety" -> graft.operators.Analytics.supplierVarietySparkSql,
-    "a_min_cost_supplier" -> graft.operators.Analytics.minCostSupplierSparkSql,
     "a_disjunctive_revenue" -> graft.operators.Analytics.disjunctiveRevenueSql,
     "a_dominant_suppliers" -> graft.operators.Analytics.dominantSuppliersSql,
-    "a_important_parts" -> graft.operators.Analytics.importantPartsSparkSql,
     "a_promo_revenue" -> graft.operators.Analytics.promoRevenueSql,
     "a_top_supplier" -> graft.operators.Analytics.topSupplierSql,
     "a_nation_trade_volume" -> graft.operators.Analytics.nationTradeVolumeSql,
@@ -968,8 +950,7 @@ object SqlQueries {
     * (`q3_windowed_count_salted`, `q3_windowed_count_salted_dynamic`,
     * `a_moving_window_bucketed`,
     * `d_adaptive_jaccard_pairs` — the arm CHOICE is a driver-side
-    * runtime branch SQL cannot express; its decision statistic has the
-    * `d_adaptive_jaccard_decision` text and its output equals the
+    * runtime branch SQL cannot express; its output equals the
     * `d_jaccard_pairs` text at the J > 1/2 threshold,
     * `d_jaccard_prefix_pairs`, `d_embedding_neardup_lsh`, `s_ivf_topk`,
     * `s_ivf_recall` — it composes `s_ivf_topk`; the SQL-face recall
@@ -984,8 +965,14 @@ object SqlQueries {
     * `d_incremental_*`) whose value is a specific physical plan or a
     * long expr pipeline the Column form already states more clearly —
     * their SEMANTIC twins (the unsalted/unbucketed/brute-force forms)
-    * all have SQL texts above. Every other gated batch query has a SQL
-    * text; SqlParitySpec pins the boundary by exhaustive complement.
+    * all have SQL texts above. The texts whose dialect had to diverge
+    * from the DuckDB oracle through a Spark copy in `operators/` (the
+    * derived-partsupp TPC-H shapes, z-order layout, count-min, bloom,
+    * BM25, RRF, edit distance, the triangle counts, the adaptive
+    * decision and the source-signature sweeps) are retired: those
+    * queries answer to their DuckDB oracle alone (OracleGateSpec).
+    * Every other gated batch query has a SQL text; SqlParitySpec pins
+    * the boundary by exhaustive complement.
     */
   /** One BPE iteration's CTE triple (pairsN, ruleN, symsN) in the Spark
     * SQL dialect — shared by the p_bpe_merges and p_bpe_tokenize texts.
@@ -1012,15 +999,6 @@ object SqlQueries {
        |  FROM syms${i - 1} LEFT JOIN rule$i r ON true)""".stripMargin
 
   private lazy val longTailSql: Map[String, String] = Map(
-    "p_zorder_layout" -> graft.operators.Layout.zorderLayoutSparkSql,
-    "p_zorder_skipping" -> graft.operators.Layout.zorderSkippingSparkSql,
-    "t_cms_join_size" -> Sketches.cmsJoinSizeSparkSql,
-    "g_dup_triangles" ->
-      graft.operators.Graph.dupTrianglesSqlOver(minhashLshPairsSparkSql, "div"),
-    "g_dup_triangles_simhash" ->
-      graft.operators.Graph.dupTrianglesSqlOver(
-        s"WITH $simhashPairsSparkCtes SELECT id_a, id_b FROM spairs",
-        "div", withBound = true),
     "p_temperature_mix" ->
       s"""WITH per_source AS (
          |  SELECT source,
@@ -1080,13 +1058,6 @@ object SqlQueries {
          |SELECT token, cnt_a, cnt_b, share_a_ppm, share_b_ppm,
          |  abs(share_a_ppm - share_b_ppm) AS drift_ppm
          |FROM sh""".stripMargin,
-    "s_bm25_topk" -> Retrieval.bm25TopKSparkSql,
-    "s_bm25_topk_capped" -> Retrieval.bm25TopKCappedSparkSql,
-    "s_hybrid_rrf_topk" -> Retrieval.hybridRrfTopKSparkSql(textCosineTopKSparkSql),
-    "t_cms_token_freq" -> Sketches.cmsTokenFreqSparkSql,
-    "t_cms_sketch_stats" -> Sketches.cmsSketchStatsSparkSql,
-    "a_bloom_semijoin" -> Sketches.bloomSemijoinSparkSql,
-    "d_editdist_neardup" -> Sketches.editdistNearDupSparkSql(minhashLshPairsSparkSql),
     "t_token_char_fit" ->
       """WITH b AS (
         |  SELECT source, CAST(n_chars AS BIGINT) AS x,
@@ -1530,12 +1501,6 @@ object SqlQueries {
         |SELECT a.source AS src_a, b.source AS src_b, count(*) AS shared_fps
         |FROM sf a JOIN sf b ON a.fp = b.fp AND a.source < b.source
         |GROUP BY 1, 2""".stripMargin,
-    "p_source_overlap_minhash" ->
-      graft.operators.Curation.sourceOverlapMinhashSqlOver(
-        "poly_hash(text)", "div"),
-    "p_incremental_source_sigs" ->
-      graft.operators.Curation.incrementalSourceSigsSqlOver(
-        "poly_hash(text)", "div"),
     "p_top_quality" ->
       s"""SELECT source, rk, doc_id, quality_score
          |FROM (

@@ -510,9 +510,8 @@ object Analytics {
   // the (year, flag) two-phase aggregate; the reshape is a SECOND
   // aggregate whose exchange carries only the |years|·|flags|
   // pre-aggregated rows — negligible at any scale. Oracle states the
-  // same table as conditional aggregation (the pivot identity); the
-  // Spark-SQL face uses the native PIVOT syntax — three formulations,
-  // one result.
+  // same table as conditional aggregation (the pivot identity) — two
+  // formulations, one result.
   // ------------------------------------------------------------------
   def pivotRevenue(spark: SparkSession, sfDir: String): DataFrame =
     // r19: widen measured and DECLINED (Probe: 0.56 widened vs 0.52
@@ -1789,22 +1788,6 @@ object Analytics {
        |    (bp * 293 + bs * 577) % 99901 + 100 AS ps_supplycost_cents
        |  FROM psg)""".stripMargin
 
-  /** Spark-SQL-dialect twin of [[PartSuppCteDuck]] (div / sequence). */
-  val PartSuppCteSpark: String =
-    s"""s0 AS (
-       |  SELECT count(*) AS s0 FROM supplier WHERE s_suppkey < ${PartSuppStride}L),
-       |psg AS (
-       |  SELECT p_partkey, p_partkey % ${PartSuppStride}L AS bp,
-       |    p_partkey - p_partkey % ${PartSuppStride}L AS shard_off,
-       |    (p_partkey % ${PartSuppStride}L + i * greatest(1L, s0 DIV 4)) % s0 AS bs
-       |  FROM part CROSS JOIN s0
-       |  CROSS JOIN (SELECT explode(sequence(0L, 3L)) AS i)),
-       |partsupp AS (
-       |  SELECT DISTINCT p_partkey AS ps_partkey, shard_off + bs AS ps_suppkey,
-       |    (bp * 17 + bs * 31) % 9999 + 1 AS ps_availqty,
-       |    (bp * 293 + bs * 577) % 99901 + 100 AS ps_supplycost_cents
-       |  FROM psg)""".stripMargin
-
   /** The derived relation itself, gated whole: pins Spark↔DuckDB parity
     * of the generator (every key, qty and cost hash-compared) so the four
     * TPC-H consumers below inherit a verified base table.
@@ -1817,17 +1800,12 @@ object Analytics {
        |SELECT ps_partkey, ps_suppkey, ps_availqty, ps_supplycost_cents
        |FROM partsupp""".stripMargin
 
-  val partsuppBuildSparkSql: String =
-    s"""WITH $PartSuppCteSpark
-       |SELECT ps_partkey, ps_suppkey, ps_availqty, ps_supplycost_cents
-       |FROM partsupp""".stripMargin
-
   // ------------------------------------------------------------------
   // TPC-H Q2 shape: min-cost supplier per part — the correlated-scalar-
   // subquery decorrelation story. The DataFrame form IS the decorrelated
-  // plan (per-part min + equality join back); the SQL faces state the
+  // plan (per-part min + equality join back); the oracle states the
   // textbook correlated form (`WHERE cost = (SELECT min ... WHERE same
-  // part)`) and Catalyst/DuckDB decorrelate to the same agg+join —
+  // part)`) and DuckDB decorrelates it to the same agg+join —
   // asserted equal by the hash gate, like a_small_qty_revenue. Runs on
   // the REAL derived partsupp (r15 — the lineitem price-bridge proxy is
   // deleted): EUROPE suppliers the region cut (dimension chain
@@ -1861,8 +1839,8 @@ object Analytics {
       .select("p_partkey", "min_cost_cents", "best_suppkey")
   }
 
-  private def minCostSupplierText(cte: String): String =
-    s"""WITH $cte,
+  val minCostSupplierSql: String =
+    s"""WITH $PartSuppCteDuck,
        |eu AS (
        |  SELECT s_suppkey FROM supplier
        |  JOIN nation ON s_nationkey = n_nationkey
@@ -1878,9 +1856,6 @@ object Analytics {
        |  SELECT min(ps_supplycost_cents) FROM pse i
        |  WHERE i.ps_partkey = o.ps_partkey)
        |GROUP BY 1, 2""".stripMargin
-
-  val minCostSupplierSql: String = minCostSupplierText(PartSuppCteDuck)
-  val minCostSupplierSparkSql: String = minCostSupplierText(PartSuppCteSpark)
 
   // ------------------------------------------------------------------
   // TPC-H Q11 shape: "important parts" — per-part stock value
@@ -1910,8 +1885,8 @@ object Analytics {
       .select("p_partkey", "value_cents")
   }
 
-  private def importantPartsText(cte: String): String =
-    s"""WITH $cte,
+  val importantPartsSql: String =
+    s"""WITH $PartSuppCteDuck,
        |eu AS (
        |  SELECT s_suppkey FROM supplier
        |  JOIN nation ON s_nationkey = n_nationkey
@@ -1927,9 +1902,6 @@ object Analytics {
        |SELECT p_partkey, value_cents
        |FROM v CROSS JOIN t
        |WHERE value_cents * n_parts > total_cents""".stripMargin
-
-  val importantPartsSql: String = importantPartsText(PartSuppCteDuck)
-  val importantPartsSparkSql: String = importantPartsText(PartSuppCteSpark)
 
   // ------------------------------------------------------------------
   // TPC-H Q14 shape: promo revenue share per ship-year — conditional
@@ -2274,8 +2246,8 @@ object Analytics {
       .agg(sum("amount_e4").as("profit_e4"))
   }
 
-  private def nationProfitText(cte: String): String =
-    s"""WITH $cte,
+  val nationProfitSql: String =
+    s"""WITH $PartSuppCteDuck,
        |rc AS (
        |  SELECT ps_partkey, min(ps_supplycost_cents) AS ref_cost_cents
        |  FROM partsupp GROUP BY 1)
@@ -2296,9 +2268,6 @@ object Analytics {
        |JOIN orders ON l_orderkey = o_orderkey
        |WHERE p_name LIKE '$ProfitNamePattern'
        |GROUP BY 1, 2""".stripMargin
-
-  val nationProfitSql: String = nationProfitText(PartSuppCteDuck)
-  val nationProfitSparkSql: String = nationProfitText(PartSuppCteSpark)
 
   // ------------------------------------------------------------------
   // TPC-H Q10 shape: returned-item reporting — revenue lost to 'R'-flag
@@ -2401,21 +2370,6 @@ object Analytics {
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |GROUP BY 1""".stripMargin
 
-  /** Spark-dialect twin of [[shipDelayPrioritySql]] (datediff argument
-    * order differs between engines; everything else is shared).
-    */
-  val shipDelayPrioritySparkSql: String =
-    """SELECT
-      |  GREATEST(-4, LEAST(4, CAST(FLOOR(
-      |    datediff(CAST(l_shipdate AS DATE), CAST(o_orderdate AS DATE))
-      |    / 180.0) AS BIGINT))) AS delay_band,
-      |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-      |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-      |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-      |    THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-      |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      |GROUP BY 1""".stripMargin
-
   // ------------------------------------------------------------------
   // TPC-H Q13 shape: customer order-count distribution INCLUDING the
   // zero-order customers (the left-join-then-count trap). Shaped for
@@ -2475,17 +2429,14 @@ object Analytics {
       .agg(count(lit(1)).as("supplier_cnt"))
   }
 
-  private def supplierVarietyText(cte: String): String =
-    s"""WITH $cte
+  val supplierVarietySql: String =
+    s"""WITH $PartSuppCteDuck
        |SELECT p_brand, p_type, CAST(p_size AS BIGINT) AS p_size,
        |  CAST(count(DISTINCT ps_suppkey) AS BIGINT) AS supplier_cnt
        |FROM partsupp JOIN part ON ps_partkey = p_partkey
        |WHERE p_brand <> 'Brand#1' AND p_type <> 'ECONOMY'
        |  AND p_size IN (${VarietySizes.mkString(", ")})
        |GROUP BY 1, 2, 3""".stripMargin
-
-  val supplierVarietySql: String = supplierVarietyText(PartSuppCteDuck)
-  val supplierVarietySparkSql: String = supplierVarietyText(PartSuppCteSpark)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "a_forecast_revenue" -> (forecastRevenue _),

@@ -923,18 +923,14 @@ object Curation {
           .as("true_jaccard_ppm"))
   }
 
-  /** The SQL body in either dialect — `fpHash` is the dialect's 62-bit
-    * char polyhash expression over `text`, `idiv` its integer-division
-    * token; one body, both faces.
-    */
-  def sourceOverlapMinhashSqlOver(fpHash: String, idiv: String): String = {
+  lazy val sourceOverlapMinhashSql: String = {
     import graft.functions.Parity._
     val aggs = minhashAggDuck("h").mkString(",\n    ")
     val matchSum = (0 until NumHashes)
       .map(i => s"CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END")
       .mkString(" + ")
     s"""WITH base AS (
-       |  SELECT DISTINCT source, $fpHash $idiv $Pack AS h
+       |  SELECT DISTINCT source, ${charPolyHashDuck("text")} // $Pack AS h
        |  FROM (SELECT source, text FROM documents)),
        |sigs AS (
        |  SELECT source, CAST(count(*) AS BIGINT) AS n_fps,
@@ -951,17 +947,12 @@ object Curation {
        |  FROM base x JOIN base y ON x.h = y.h AND x.source < y.source
        |  GROUP BY 1, 2)
        |SELECT pm.src_a, pm.src_b, pm.sig_matches,
-       |  pm.sig_matches * 1000000 $idiv ${NumHashes} AS est_jaccard_ppm,
+       |  pm.sig_matches * 1000000 // ${NumHashes} AS est_jaccard_ppm,
        |  COALESCE(iv.inter, 0) AS inter,
        |  pm.n_a + pm.n_b - COALESCE(iv.inter, 0) AS uni,
        |  COALESCE(iv.inter, 0) * 1000000
-       |    $idiv (pm.n_a + pm.n_b - COALESCE(iv.inter, 0)) AS true_jaccard_ppm
+       |    // (pm.n_a + pm.n_b - COALESCE(iv.inter, 0)) AS true_jaccard_ppm
        |FROM pm LEFT JOIN iv ON pm.src_a = iv.src_a AND pm.src_b = iv.src_b""".stripMargin
-  }
-
-  lazy val sourceOverlapMinhashSql: String = {
-    import graft.functions.Parity._
-    sourceOverlapMinhashSqlOver(charPolyHashDuck("text"), "//")
   }
 
   // ------------------------------------------------------------------
@@ -1004,22 +995,17 @@ object Curation {
       .select(coalesce(col("a.source"), col("b.source")).as("source") +: merged: _*)
   }
 
-  /** The recompute oracle body in either dialect — the gate's whole
-    * point is that the merged output hashes equal to this.
+  /** The recompute oracle — the gate's whole point is that the merged
+    * output hashes equal to this.
     */
-  def incrementalSourceSigsSqlOver(fpHash: String, idiv: String): String = {
+  lazy val incrementalSourceSigsSql: String = {
     import graft.functions.Parity._
     val aggs = minhashAggDuck("h").mkString(",\n    ")
     s"""WITH base AS (
-       |  SELECT DISTINCT source, $fpHash $idiv $Pack AS h
+       |  SELECT DISTINCT source, ${charPolyHashDuck("text")} // $Pack AS h
        |  FROM (SELECT source, text FROM documents))
        |SELECT source, $aggs
        |FROM base GROUP BY source""".stripMargin
-  }
-
-  lazy val incrementalSourceSigsSql: String = {
-    import graft.functions.Parity._
-    incrementalSourceSigsSqlOver(charPolyHashDuck("text"), "//")
   }
 
   // ------------------------------------------------------------------

@@ -663,15 +663,19 @@ object Dedup {
     else jaccardPrefixPairs(spark, sfDir)
   }
 
-  /** Shared decision-SQL body over an injected shingle relation (DuckDB
-    * and Spark dialects differ only in the shingle CTE text) — one body,
-    * so a constant edit cannot diverge the faces.
-    */
-  def adaptiveJaccardDecisionSqlOver(shingleSql: String): String = {
+  // LAZY: adaptiveCellExprs reads Sketches.cmsCellExprs, and Sketches'
+  // own oracle vals read back into Dedup (editdistNearDupSql embeds
+  // minhashLshPairsSql) — an eager val here runs Sketches' initializer
+  // in the middle of Dedup's and bakes a literal "null" into that SQL
+  // (caught by the r14 full sf0.01 sweep). The `oracles` map below is
+  // ALSO lazy, so this is structural, not positional: Dedup's
+  // initializer completes without ever entering Sketches, whatever the
+  // declaration order.
+  lazy val adaptiveJaccardDecisionSql: String = {
     val cells = adaptiveCellExprs("sh").zipWithIndex
       .map { case (e, j) => s"SELECT $j AS j, $e AS cell FROM sh" }
       .mkString("\n  UNION ALL ")
-    s"""WITH sh AS ($shingleSql),
+    s"""WITH sh AS ($shingleRelSql),
        |cells AS (
        |  $cells),
        |counters AS (
@@ -684,17 +688,6 @@ object Dedup {
        |       ELSE 'prefix' END AS arm
        |FROM rows_per_depth""".stripMargin
   }
-
-  // LAZY: adaptiveCellExprs reads Sketches.cmsCellExprs, and Sketches'
-  // own oracle vals read back into Dedup (editdistNearDupSql embeds
-  // minhashLshPairsSql) — an eager val here runs Sketches' initializer
-  // in the middle of Dedup's and bakes a literal "null" into that SQL
-  // (caught by the r14 full sf0.01 sweep). The `oracles` map below is
-  // ALSO lazy, so this is structural, not positional: Dedup's
-  // initializer completes without ever entering Sketches, whatever the
-  // declaration order.
-  lazy val adaptiveJaccardDecisionSql: String =
-    adaptiveJaccardDecisionSqlOver(shingleRelSql)
 
   /** The arm-invariant output oracle: the exact recompute at J > 1/2 —
     * the same body as [[jaccardPairsSql]] at the prefix threshold.

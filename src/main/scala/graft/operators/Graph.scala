@@ -51,7 +51,7 @@ object Graph {
     */
   val Scale = 1000000000000L
 
-  /** Fixed iteration count (unrolled in the DuckDB/Spark-SQL oracles). */
+  /** Fixed iteration count (unrolled in the DuckDB oracles). */
   val Iters = 3
 
   /** Directed edge list (src, dst): both directions of each distinct
@@ -239,12 +239,10 @@ object Graph {
     }
   }
 
-  /** The triangle query text over an injected `pairs(id_a, id_b, …)`
-    * CTE — dialect-neutral except the integer-division token (`//`
-    * DuckDB, `div` Spark), so the oracle and the SQL face share one
-    * body (the `editdistNearDupSparkSql(pairs)` pattern).
+  /** The triangle oracle text over an injected `pairs(id_a, id_b, …)`
+    * CTE, so the minhash and simhash graphs share one body.
     */
-  def dupTrianglesSqlOver(pairsSql: String, idiv: String,
+  private def dupTrianglesSqlOver(pairsSql: String,
       withBound: Boolean = false): String = {
     val boundCol =
       if (withBound)
@@ -277,16 +275,16 @@ object Graph {
        |SELECT
        |  (SELECT CAST(count(*) AS BIGINT) FROM deg) AS n_nodes,
        |  (SELECT CAST(count(*) AS BIGINT) FROM e) AS n_edges,
-       |  (SELECT COALESCE(CAST(sum(d * (d - 1)) AS BIGINT), 0) $idiv 2 FROM deg)
+       |  (SELECT COALESCE(CAST(sum(d * (d - 1)) AS BIGINT), 0) // 2 FROM deg)
        |    AS n_wedges,
        |  (SELECT n_triangles FROM tri) AS n_triangles$boundCol""".stripMargin
   }
 
   val dupTrianglesSql: String =
-    dupTrianglesSqlOver(Dedup.minhashLshPairsSql, "//")
+    dupTrianglesSqlOver(Dedup.minhashLshPairsSql)
 
   val dupTrianglesSimhashSql: String =
-    dupTrianglesSqlOver(Dedup.simhashPairsSql, "//", withBound = true)
+    dupTrianglesSqlOver(Dedup.simhashPairsSql, withBound = true)
 
   // ------------------------------------------------------------------
   // DuckDB oracles — the same graph + the same integer formula with the

@@ -177,50 +177,6 @@ object Layout {
        |${rep("linear_x", "xbucket")}""".stripMargin
   }
 
-  // Spark-dialect texts (the SQL face): the same relations with `div`.
-  private val bucketedSpark: String =
-    s"""b AS (SELECT CAST(event_id AS BIGINT) AS x,
-       |  CAST(floor(value) AS BIGINT) AS y FROM events),
-       |st AS (SELECT max(x) AS xmax, max(y) AS ymax, count(*) AS n FROM b),
-       |wr AS (SELECT x, y,
-       |  (CAST(rank() OVER (ORDER BY x) AS BIGINT) - 1) * ${1L << Bits} div nn AS xr,
-       |  (CAST(rank() OVER (ORDER BY y) AS BIGINT) - 1) * ${1L << Bits} div nn AS yr
-       |  FROM (SELECT x, y, (SELECT n FROM st) AS nn FROM b)),
-       |zt AS (SELECT x, y, ($zSpark) div $ZDiv AS zbucket,
-       |  xr * $Buckets div ${1L << Bits} AS xbucket FROM wr)""".stripMargin
-
-  val zorderLayoutSparkSql: String =
-    s"""WITH $bucketedSpark
-       |SELECT zbucket AS bucket, count(*) AS cnt,
-       |  min(x) AS min_x, max(x) AS max_x, min(y) AS min_y, max(y) AS max_y
-       |FROM zt GROUP BY zbucket""".stripMargin
-
-  val zorderSkippingSparkSql: String = {
-    def rep(layout: String, rel: String): String =
-      s"""SELECT '$layout' AS layout, count(*) AS buckets_total,
-         |  sum(CASE WHEN touched THEN 1L ELSE 0L END) AS buckets_touched,
-         |  sum(CASE WHEN touched THEN cnt ELSE 0L END) AS rows_scanned,
-         |  (SELECT rows_matched FROM matched) AS rows_matched
-         |FROM $rel""".stripMargin
-    s"""WITH $bucketedSpark,
-       |wb AS (SELECT x, y, zbucket, xbucket,
-       |    xmax div 4 AS x0, xmax div 4 + xmax div 10 AS x1,
-       |    ymax div 4 AS y0, ymax div 4 + ymax div 10 AS y1
-       |  FROM (SELECT x, y, zbucket, xbucket,
-       |    (SELECT xmax FROM st) AS xmax, (SELECT ymax FROM st) AS ymax FROM zt)),
-       |matched AS (SELECT count(*) AS rows_matched FROM wb
-       |  WHERE x BETWEEN x0 AND x1 AND y BETWEEN y0 AND y1),
-       |zs AS (SELECT NOT (max(x) < min(x0) OR min(x) > min(x1)
-       |    OR max(y) < min(y0) OR min(y) > min(y1)) AS touched, count(*) AS cnt
-       |  FROM wb GROUP BY zbucket),
-       |ls AS (SELECT NOT (max(x) < min(x0) OR min(x) > min(x1)
-       |    OR max(y) < min(y0) OR min(y) > min(y1)) AS touched, count(*) AS cnt
-       |  FROM wb GROUP BY xbucket)
-       |${rep("zorder", "zs")}
-       |UNION ALL
-       |${rep("linear_x", "ls")}""".stripMargin
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "p_zorder_layout" -> (zorderLayout _),
     "p_zorder_skipping" -> (zorderSkipping _))

@@ -255,16 +255,15 @@ object Retrieval {
       .select("query_id", "neighbor_id", "rnk", "rrf_score", "bm25_rnk", "cos_rnk")
   }
 
-  // ---- SQL (both dialects generated from the same constants) ---------
+  // ---- DuckDB oracles (generated from the same constants) -------------
 
-  /** The shared CTE chain in either dialect. `hashes` = the per-token
-    * hash-array expression, `idiv` = the dialect's integer division;
-    * `capped` inserts the df-cap vocabulary CTE and prunes the query
-    * terms against it (the [[bm25TopKCapped]] twin — one text, both
-    * engines, so a cap edit cannot diverge the faces).
+  private val hashesDuck = s"unnest(${hashedArrayDuck(tokensDuck("text"))})"
+
+  /** The BM25 CTE chain; `capped` inserts the df-cap vocabulary CTE and
+    * prunes the query terms against it (the [[bm25TopKCapped]] twin —
+    * one text, so a cap edit cannot diverge the two oracles).
     */
-  private def bm25Ctes(hashes: String, idiv: String,
-      capped: Boolean = false): String = {
+  private def bm25Ctes(capped: Boolean): String = {
     val (dfk, qt) =
       if (capped) (
         "\ndfk AS (SELECT h FROM dfr CROSS JOIN st WHERE 2 * dfr.df <= st.n),",
@@ -277,7 +276,7 @@ object Retrieval {
            |  WHERE doc_id < ${Similarity.NumQueries}),""".stripMargin)
     s"""tf AS (
        |  SELECT doc_id, h, CAST(count(*) AS BIGINT) AS tf
-       |  FROM (SELECT doc_id, ${hashes} AS h FROM documents)
+       |  FROM (SELECT doc_id, ${hashesDuck} AS h FROM documents)
        |  GROUP BY doc_id, h),
        |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
        |st AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(dl) AS BIGINT) AS t FROM dl),
@@ -285,9 +284,9 @@ object Retrieval {
        |$qt
        |sc AS (
        |  SELECT q.query_id, c.doc_id AS neighbor_id,
-       |    CAST(sum(((st.n - f.df + 1) * $IdfScale $idiv (f.df + 1))
+       |    CAST(sum(((st.n - f.df + 1) * $IdfScale // (f.df + 1))
        |      * ((44 * st.t * c.tf * $TfScale)
-       |         $idiv (20 * st.t * c.tf + 6 * st.t + 18 * d.dl * st.n)))
+       |         // (20 * st.t * c.tf + 6 * st.t + 18 * d.dl * st.n)))
        |      AS BIGINT) AS score
        |  FROM qt q
        |  JOIN tf c ON q.h = c.h AND c.doc_id <> q.query_id
@@ -297,9 +296,8 @@ object Retrieval {
        |  GROUP BY q.query_id, c.doc_id)""".stripMargin
   }
 
-  private def bm25Sql(hashes: String, idiv: String,
-      capped: Boolean = false): String =
-    s"""WITH ${bm25Ctes(hashes, idiv, capped)}
+  private def bm25Sql(capped: Boolean): String =
+    s"""WITH ${bm25Ctes(capped)}
        |SELECT query_id, neighbor_id, rnk, score FROM (
        |  SELECT query_id, neighbor_id, score,
        |    row_number() OVER (PARTITION BY query_id
@@ -307,9 +305,12 @@ object Retrieval {
        |  FROM sc)
        |WHERE rnk <= ${Similarity.TopK}""".stripMargin
 
-  private def rrfSql(bm25: String, cosine: String, idiv: String): String =
-    s"""WITH bm AS ($bm25),
-       |cs AS ($cosine),
+  val bm25TopKSql: String = bm25Sql(capped = false)
+  val bm25TopKCappedSql: String = bm25Sql(capped = true)
+
+  val hybridRrfTopKSql: String =
+    s"""WITH bm AS ($bm25TopKSql),
+       |cs AS (${TextAnalysis.textCosineTopKSql}),
        |u AS (
        |  SELECT coalesce(b.query_id, c.query_id) AS query_id,
        |    coalesce(b.neighbor_id, c.neighbor_id) AS neighbor_id,
@@ -318,8 +319,8 @@ object Retrieval {
        |    ON b.query_id = c.query_id AND b.neighbor_id = c.neighbor_id),
        |f AS (
        |  SELECT query_id, neighbor_id, bm25_rnk, cos_rnk,
-       |    (CASE WHEN bm25_rnk > 0 THEN $RrfScale $idiv ($RrfK + bm25_rnk) ELSE 0 END)
-       |    + (CASE WHEN cos_rnk > 0 THEN $RrfScale $idiv ($RrfK + cos_rnk) ELSE 0 END)
+       |    (CASE WHEN bm25_rnk > 0 THEN $RrfScale // ($RrfK + bm25_rnk) ELSE 0 END)
+       |    + (CASE WHEN cos_rnk > 0 THEN $RrfScale // ($RrfK + cos_rnk) ELSE 0 END)
        |      AS rrf_score
        |  FROM u)
        |SELECT query_id, neighbor_id, rnk, rrf_score, bm25_rnk, cos_rnk FROM (
@@ -328,23 +329,6 @@ object Retrieval {
        |      ORDER BY rrf_score DESC, neighbor_id) AS rnk
        |  FROM f)
        |WHERE rnk <= ${Similarity.TopK}""".stripMargin
-
-  private val hashesDuck = s"unnest(${hashedArrayDuck(tokensDuck("text"))})"
-  private val hashesSpark = "explode(word_shingle_hashes(text, 1, false))"
-
-  val bm25TopKSql: String = bm25Sql(hashesDuck, "//")
-  val bm25TopKSparkSql: String = bm25Sql(hashesSpark, "div")
-  val bm25TopKCappedSql: String = bm25Sql(hashesDuck, "//", capped = true)
-  val bm25TopKCappedSparkSql: String = bm25Sql(hashesSpark, "div", capped = true)
-
-  val hybridRrfTopKSql: String =
-    rrfSql(bm25TopKSql, TextAnalysis.textCosineTopKSql, "//")
-
-  /** The cosine half is injected by [[graft.SqlQueries]] so the one
-    * existing s_text_cosine_topk text is shared.
-    */
-  def hybridRrfTopKSparkSql(cosineSql: String): String =
-    rrfSql(bm25TopKSparkSql, cosineSql, "div")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s_bm25_topk" -> (bm25TopK _),

@@ -219,17 +219,17 @@ object Sketches {
       (col("est_sjs") - col("true_sjs")).as("overcount"))
   }
 
-  // ---- CMS SQL (both dialects generated from the same constants) ----
+  // ---- CMS oracles (generated from the same constants) ----
 
-  private def cmsBaseSql(unnest: String => String, hash: String => String): String = {
+  private val cmsBaseDuck: String = {
     val cells = cmsCellExprs("h").zipWithIndex
       .map { case (e, j) => s"SELECT $j AS j, $e AS cell FROM oh" }
       .mkString("\n  UNION ALL ")
     val probes = cmsCellExprs("h").zipWithIndex
       .map { case (e, j) => s"SELECT tok, exact_cnt, $j AS j, $e AS cell FROM ex" }
       .mkString("\n  UNION ALL ")
-    s"""occ AS (SELECT ${unnest("text")} AS tok FROM documents),
-       |oh AS (SELECT tok, ${hash("tok")} AS h FROM occ),
+    s"""occ AS (SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
+       |oh AS (SELECT tok, ${tok31Duck("tok")} AS h FROM occ),
        |cells AS (
        |  $cells),
        |counters AS (
@@ -244,20 +244,13 @@ object Sketches {
        |  GROUP BY p.tok, p.exact_cnt)""".stripMargin
   }
 
-  private val cmsBaseDuck: String =
-    cmsBaseSql(t => s"unnest(string_split($t, ' '))", tok31Duck)
-  private val cmsBaseSpark: String =
-    cmsBaseSql(t => s"explode(split($t, ' '))", tok31Spark)
-
-  // One SELECT body per query, parameterized on the dialect base CTE —
-  // a report-column edit cannot diverge the two faces.
-  private def cmsFreqSql(base: String): String =
-    s"""WITH $base
+  val cmsTokenFreqSql: String =
+    s"""WITH $cmsBaseDuck
        |SELECT tok AS token, exact_cnt, est_cnt, est_cnt - exact_cnt AS overcount
        |FROM est WHERE exact_cnt * $HHDen > (SELECT count(*) FROM occ)""".stripMargin
 
-  private def cmsStatsSql(base: String): String =
-    s"""WITH $base
+  val cmsSketchStatsSql: String =
+    s"""WITH $cmsBaseDuck
        |SELECT CAST($CmsDepth AS BIGINT) AS depth, CAST($CmsWidth AS BIGINT) AS width,
        |  (SELECT count(*) FROM counters) AS occupied_cells,
        |  (SELECT max(cnt) FROM counters) AS max_cell,
@@ -266,8 +259,8 @@ object Sketches {
        |  (SELECT CAST(sum(exact_cnt) AS BIGINT) FROM est) AS n_occurrences,
        |  (SELECT CAST(sum(est_cnt - exact_cnt) AS BIGINT) FROM est) AS sum_overcount""".stripMargin
 
-  private def cmsJoinSizeSql(base: String): String =
-    s"""WITH $base
+  val cmsJoinSizeDuckSql: String =
+    s"""WITH $cmsBaseDuck
        |SELECT depth, width, true_sjs, est_sjs, est_sjs - true_sjs AS overcount
        |FROM (
        |  SELECT CAST($CmsDepth AS BIGINT) AS depth, CAST($CmsWidth AS BIGINT) AS width,
@@ -275,13 +268,6 @@ object Sketches {
        |    (SELECT CAST(min(s) AS BIGINT) FROM (
        |       SELECT j, sum(cnt * cnt) AS s FROM counters GROUP BY j) rows_per_depth)
        |      AS est_sjs) x""".stripMargin
-
-  val cmsTokenFreqSql: String = cmsFreqSql(cmsBaseDuck)
-  val cmsTokenFreqSparkSql: String = cmsFreqSql(cmsBaseSpark)
-  val cmsSketchStatsSql: String = cmsStatsSql(cmsBaseDuck)
-  val cmsSketchStatsSparkSql: String = cmsStatsSql(cmsBaseSpark)
-  val cmsJoinSizeDuckSql: String = cmsJoinSizeSql(cmsBaseDuck)
-  val cmsJoinSizeSparkSql: String = cmsJoinSizeSql(cmsBaseSpark)
 
   // ------------------------------------------------------------------
   // Bloom-filter semi-join economics.
@@ -384,7 +370,7 @@ object Sketches {
       .withColumn("filter_bits", lit(m))
   }
 
-  private def bloomSqlText(): String = {
+  val bloomSemijoinSql: String = {
     def bitSelects(rel: String, extra: String): String =
       bloomCoeffs.zipWithIndex.map { case ((a, b), j) =>
         // key reduced mod P before the multiply — see bloomBitCols.
@@ -426,12 +412,6 @@ object Sketches {
        |FROM j""".stripMargin
   }
 
-  /** Both engines run the IDENTICAL text modulo `1`-vs-`key, n_orders`
-    * GROUP BY shorthand — ANSI subset.
-    */
-  val bloomSemijoinSql: String = bloomSqlText()
-  val bloomSemijoinSparkSql: String = bloomSqlText()
-
   // ------------------------------------------------------------------
   // Edit-distance near-dup refinement.
   // ------------------------------------------------------------------
@@ -460,12 +440,8 @@ object Sketches {
       .where(col("edit_distance") <= EditMax)
   }
 
-  /** One text for both engines (ANSI subset — `substr` and
-    * `levenshtein` are common), parameterized on the candidate CTE so
-    * each dialect injects its own minhash-pairs text.
-    */
-  private def editdistSql(candsSql: String): String =
-    s"""WITH cands AS ($candsSql),
+  val editdistNearDupSql: String =
+    s"""WITH cands AS (${Dedup.minhashLshPairsSql}),
        |d AS (SELECT doc_id, substr(text, 1, $EditPrefixLen) AS pfx FROM documents)
        |SELECT c.id_a, c.id_b,
        |  CAST(levenshtein(a.pfx, b.pfx) AS BIGINT) AS edit_distance
@@ -473,14 +449,6 @@ object Sketches {
        |JOIN d a ON a.doc_id = c.id_a
        |JOIN d b ON b.doc_id = c.id_b
        |WHERE levenshtein(a.pfx, b.pfx) <= $EditMax""".stripMargin
-
-  val editdistNearDupSql: String = editdistSql(Dedup.minhashLshPairsSql)
-
-  /** Spark-dialect face over the minhash text in [[graft.SqlQueries]];
-    * the candidate CTE is injected there to share the one existing
-    * text.
-    */
-  def editdistNearDupSparkSql(candsSql: String): String = editdistSql(candsSql)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "t_cms_token_freq" -> (cmsTokenFreq _),
