@@ -49,31 +49,19 @@ object Tables {
     spark.read.schema(schema).parquet(path)
   }
 
-  // Widened fact loaders (r18, guide §2.5): the fixture tables are ONE
-  // single-row-group parquet file each, so a bare scan is a single task
-  // and every expression Catalyst fuses into the scan stage — tokenize,
-  // shingle explode, decimal math, broadcast-join probes, partial
-  // aggregation — runs on 1 core of local[32]. Par.widen inserts one
-  // hash repartition on the table's high-cardinality key ONLY when the
-  // file layout under-feeds defaultParallelism; at cluster scale (many
-  // files/splits) it is the identity. Only the BIG sides get a widened
-  // face — dimension tables (region…part) stay narrow because they are
-  // broadcast sides whose scan work is trivial. Heavy consumers opt in
-  // per site; trivial consumers keep the bare loaders (the exchange is
-  // not free at fixture scale).
+  // Widened documents loader (r18, guide §2.5): the fixture tables are
+  // ONE single-row-group parquet file each, so a bare scan is a single
+  // task and every expression Catalyst fuses into the scan stage —
+  // tokenize, shingle explode, partial aggregation — runs on 1 core of
+  // local[32]. Par.widen inserts one hash repartition on doc_id ONLY when
+  // the file layout under-feeds defaultParallelism; at cluster scale
+  // (many files/splits) it is the identity. The text-heavy consumers opt
+  // in per site; every other table keeps its bare loader (the exchange
+  // is not free at fixture scale).
   import org.apache.spark.sql.functions.col
 
   def documentsWide(spark: SparkSession, sfDir: String): DataFrame =
     Par.widenTable(spark, documents(spark, sfDir), sfDir, "documents", col("doc_id"))
-  def lineitemWide(spark: SparkSession, sfDir: String): DataFrame =
-    Par.widenTable(spark, lineitem(spark, sfDir), sfDir, "lineitem",
-      col("l_orderkey"), col("l_linenumber"))
-  def ordersWide(spark: SparkSession, sfDir: String): DataFrame =
-    Par.widenTable(spark, orders(spark, sfDir), sfDir, "orders", col("o_orderkey"))
-  def eventsWide(spark: SparkSession, sfDir: String): DataFrame =
-    Par.widenTable(spark, events(spark, sfDir), sfDir, "events", col("event_id"))
-  def embeddingsWide(spark: SparkSession, sfDir: String): DataFrame =
-    Par.widenTable(spark, embeddings(spark, sfDir), sfDir, "embeddings", col("vec_id"))
 
   def region(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "nation")

@@ -93,14 +93,4 @@ object KafkaSource {
       maxOffsetsPerTrigger: Option[Long] = None): DataFrame =
     portWordRecords(
       reader(spark, brokers, topics, startingOffsets, maxOffsetsPerTrigger).load())
-
-  /** Full keyed S1 pipeline: Kafka topic → keyed z-x record stream. */
-  def keyedZxStream(
-      spark: SparkSession,
-      brokers: String,
-      topics: String,
-      startingOffsets: String = "latest",
-      maxOffsetsPerTrigger: Option[Long] = None): DataFrame =
-    keyedZxRecords(
-      reader(spark, brokers, topics, startingOffsets, maxOffsetsPerTrigger).load())
 }

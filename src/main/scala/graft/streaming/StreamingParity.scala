@@ -65,14 +65,15 @@ object EventStreams {
   *      window). The only Q2 stream with map-side partial aggregation,
   *      and the only one that runs on the default state store.
   *   2. [[q2TransformWithState]] — the reference-shaped form: explicit
-  *      keyed state (one ValueState of per-port counts per (word,
-  *      window)) with one event-time timer per (word, window), emission
-  *      exactly at watermark passage — the engine-managed analogue of
-  *      C4's trigger-scan-emit-evict loop.
+  *      keyed state (one ValueState of open (word, window, port) counts
+  *      per word bucket), closing a window in the micro-batch whose own
+  *      rows pass its end, with event-time timers as the fallback — the
+  *      engine-managed analogue of C4's punctuation-driven
+  *      scan-emit-evict loop, including its "data come late ignore" rule.
   *
   * Both are asserted equal to the batch form [[q2Batch]] (the gated
-  * RefQueries.q2Plan) by StreamingParitySpec (MemoryStream fixtures from
-  * FIXTURES.md §4).
+  * RefQueries.q2Plan) on in-order input by StreamingParitySpec
+  * (MemoryStream fixtures from FIXTURES.md §4).
   */
 object StreamingParity {
 
@@ -146,107 +147,143 @@ object StreamingParity {
       .flatMap(_.stateOperators)
       .map(_.numRowsDroppedByWatermark).sum
 
-  /** One (word, window)'s per-port counts: `counts(i)` rows seen on
-    * `ports(i)`, ports distinct. Two arrays, not a `Map[Int, Long]`:
-    * transformWithState checks each state schema through Avro, whose map
-    * keys must be strings, so a map with int keys fails the query on its
-    * first trigger.
+  /** Q2's row as the stateful operator reads it: word, window, port. */
+  case class WordPort(word: String, ltw: Long, port: Int)
+
+  /** One word bucket's open entries as parallel arrays: `counts(i)` rows
+    * of `words(i)` in window `ltws(i)` on port `ports(i)`, one entry per
+    * distinct (word, ltw, port). Arrays, not a map: transformWithState
+    * checks each state schema through Avro, whose map keys must be
+    * strings.
     */
-  case class PortCounts(ports: Array[Int], counts: Array[Long])
+  case class BucketCounts(words: Array[String], ltws: Array[Long],
+      ports: Array[Int], counts: Array[Long])
 
   /** Built once per JVM: an encoder built in `init()` runs Scala
     * reflection in every task of every trigger.
     */
-  lazy val portCountsEncoder: org.apache.spark.sql.Encoder[PortCounts] =
-    org.apache.spark.sql.Encoders.product[PortCounts]
+  lazy val bucketCountsEncoder: org.apache.spark.sql.Encoder[BucketCounts] =
+    org.apache.spark.sql.Encoders.product[BucketCounts]
+
+  /** Word buckets of [[q2TransformWithState]]: a row's state key is
+    * `pmod(hash(word), Buckets)`.
+    *   - It is part of the state key, so changing it breaks a restart from
+    *     an existing checkpoint.
+    *   - 64 spreads evenly over the shuffle partitions and caps Q2's state
+    *     parallelism at 64 tasks.
+    *   - At the benchmark's rate (997 words, 4000 rows/s) nearly every
+    *     bucket gets rows of each tick, so a bucket's own rows carry the
+    *     event-time frontier.
+    */
+  val Buckets: Int = 64
+
+  private lazy val q2Log = org.slf4j.LoggerFactory.getLogger(classOf[Q2StatefulProcessor])
 
   /** Reference-shaped Q2 on the transformWithState API (typed state
-    * handles + first-class event-time timers, RocksDB-only): the
-    * engine-native analogue of the reference's forked mapWithState
-    * operator (C4), whose state-scan-at-trigger loop becomes
-    * handleExpiredTimer and whose per-key per-port counts become one
-    * [[PortCounts]] ValueState per (word, window). The timer replaces
-    * punctuation control rows; watermark passage replaces the trigger
-    * scan; emitting on expiry replaces the emit+evict path
+    * handles + event-time timers, RocksDB-only): the engine-native
+    * analogue of the reference's forked mapWithState operator (C4). State
+    * is one [[BucketCounts]] per word bucket ([[Buckets]]). A bucket's own
+    * rows play the reference's punctuation rows: each batch closes every
+    * window below its largest window in the bucket (and below the
+    * watermark's window); one event-time timer per (bucket, window) closes
+    * the windows of a bucket that sees no later row
     * (state/src/main/scala/cluster/optimized/HashJoin.scala:77-99).
     *
-    * Cost model, per key: one state get and one put per micro-batch (the
-    * key's rows are counted per port in memory in between), one get and
-    * one delete at close; no RocksDB prefix scan anywhere — the Structured
-    * Streaming cost model of one state update per key per epoch. That
-    * matters most on a hot key, whose whole share of the batch lands on
-    * one task. The engine still builds the state handle once per task per
-    * trigger in `init()`; its value encoder is [[portCountsEncoder]].
-    * There is no pre-shuffle partial combine by (word, window, port): the
-    * engine's late filter drops rows one at a time by event time at this
-    * operator, and a combined row would carry one event time for rows on
-    * both sides of the watermark.
+    * Late rule, the reference's "data come late ignore"
+    * (state/src/main/scala/timetable/MyStateJoinUtils.scala:44-45): a row
+    * whose window ended at or before the eviction watermark is dropped and
+    * counted in one WARN line per bucket, not in
+    * `numRowsDroppedByWatermark`. So a row counts if and only if its
+    * window is open at the start of its batch, whatever the bucket count:
+    * a window closed early in batch n ends at or before batch n's largest
+    * event time, which is batch n+1's eviction watermark. For in-order
+    * input (Q2's 0 ms delay) nothing is dropped, and a window closes in
+    * the batch whose own rows pass its end, one trigger before the
+    * engine's lagging watermark would close it. Out-of-order rows that the
+    * engine's late filter still admits are dropped, as the watermark
+    * contract allows.
+    *
+    * Cost model, per bucket and batch: one state get and one put (or
+    * clear), the rows counted in memory in between, one timer put per
+    * opened window and one delete per window closed early — at most
+    * [[Buckets]] timers per window. Grouping by a bucket column needs no
+    * per-row key function, so no `AppendColumns` deserialize and
+    * serialize before the shuffle. A hot word's share of a batch still
+    * lands on one task.
     */
   class Q2StatefulProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        (String, Long), (java.sql.Timestamp, String, Long, Int), Q2Result] {
-    import org.apache.spark.sql.streaming.{TimeMode, TTLConfig}
-    import org.apache.spark.sql.streaming
+      extends org.apache.spark.sql.streaming.StatefulProcessor[Int, WordPort, Q2Result] {
+    import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig}
+    import scala.collection.mutable
 
-    @transient private var portCounts: streaming.ValueState[PortCounts] = _
+    @transient private var open: org.apache.spark.sql.streaming.ValueState[BucketCounts] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      portCounts = getHandle.getValueState[PortCounts](
-        "portCounts", portCountsEncoder, TTLConfig.NONE)
+      open = getHandle.getValueState[BucketCounts](
+        "bucketCounts", bucketCountsEncoder, TTLConfig.NONE)
 
-    override def handleInputRows(
-        key: (String, Long),
-        rows: Iterator[(java.sql.Timestamp, String, Long, Int)],
-        timers: org.apache.spark.sql.streaming.TimerValues): Iterator[Q2Result] = {
-      val stored = portCounts.get() // null: first contact
-      val counts = scala.collection.mutable.HashMap.empty[Int, Long]
-      if (stored != null) counts ++= stored.ports.iterator.zip(stored.counts)
-      rows.foreach { case (_, _, _, port) =>
-        counts(port) = counts.getOrElse(port, 0L) + 1L
+    /** The stored entries, one mutable count per (word, ltw, port). */
+    private def load(): mutable.HashMap[WordPort, Array[Long]] = {
+      val entries = mutable.HashMap.empty[WordPort, Array[Long]]
+      val b = open.get() // null: no open window
+      if (b != null) b.words.indices.foreach { i =>
+        entries(WordPort(b.words(i), b.ltws(i), b.ports(i))) = Array(b.counts(i))
       }
-      val end = (key._2 + 1) * SlotMs
-      if (end <= timers.getCurrentWatermarkInMs()) {
-        // This batch's (eviction) watermark already passed the window end
-        // — reachable under cross-batch key skew: a later batch carries
-        // this window's first rows for some key (they clear the LATE
-        // filter, which lags one batch) while the watermark has moved past
-        // the window. A timer at `end` would be in the past, so close the
-        // window now: emit once, keep no state. A timer registered by an
-        // earlier batch still fires and finds no state. Any still-later
-        // row for this window is dropped by the engine's late filter.
-        if (stored != null) portCounts.clear()
-        Iterator.single(Q2Result(key._1, key._2, Shapes.minIfComplete(counts.values)))
-      } else {
-        portCounts.update(PortCounts(counts.keys.toArray, counts.values.toArray))
-        // One event-time timer per key closes the window; register only on
-        // first contact (re-registration would duplicate expirations).
-        if (stored == null) getHandle.registerTimer(end)
-        Iterator.empty
-      }
+      entries
     }
 
-    override def handleExpiredTimer(
-        key: (String, Long),
-        timers: org.apache.spark.sql.streaming.TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Q2Result] = {
-      // State may already be gone if the late-close path fired first.
-      val stored = portCounts.get()
-      if (stored == null) Iterator.empty
+    /** Stores the entries of windows from `limit` on and returns the
+      * results of the windows below it (computed before it returns).
+      */
+    private def close(entries: mutable.HashMap[WordPort, Array[Long]],
+        limit: Long): Iterator[Q2Result] = {
+      val (closed, kept) = entries.partition(_._1.ltw < limit)
+      if (kept.isEmpty) open.clear()
       else {
-        portCounts.clear()
-        Iterator.single(Q2Result(key._1, key._2, Shapes.minIfComplete(stored.counts)))
+        val ks = kept.toArray
+        open.update(BucketCounts(ks.map(_._1.word), ks.map(_._1.ltw),
+          ks.map(_._1.port), ks.map(_._2(0))))
       }
+      closed.groupMap(e => (e._1.word, e._1.ltw))(_._2(0)).iterator
+        .map { case ((word, ltw), counts) => Q2Result(word, ltw, Shapes.minIfComplete(counts)) }
     }
+
+    override def handleInputRows(bucket: Int, rows: Iterator[WordPort],
+        timers: TimerValues): Iterator[Q2Result] = {
+      val firstOpen = timers.getCurrentWatermarkInMs() / SlotMs
+      val entries = load()
+      val stored = entries.keysIterator.map(_.ltw).toSet
+      var late = 0L
+      var maxLtw = firstOpen
+      rows.foreach { r =>
+        if (r.ltw < firstOpen) late += 1
+        else {
+          entries.getOrElseUpdate(r, Array(0L))(0) += 1
+          if (r.ltw > maxLtw) maxLtw = r.ltw
+        }
+      }
+      if (late > 0) q2Log.warn(s"Q2 bucket $bucket: data come late ignore: " +
+        s"$late rows in windows that ended at or before the watermark " +
+        s"${timers.getCurrentWatermarkInMs()} ms")
+      val opened = entries.keysIterator.map(_.ltw).filter(_ >= maxLtw).toSet -- stored
+      opened.foreach(ltw => getHandle.registerTimer((ltw + 1) * SlotMs))
+      stored.filter(_ < maxLtw).foreach(ltw => getHandle.deleteTimer((ltw + 1) * SlotMs))
+      close(entries, maxLtw)
+    }
+
+    override def handleExpiredTimer(bucket: Int, timers: TimerValues,
+        info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Q2Result] =
+      close(load(), info.getExpiryTimeInMs() / SlotMs)
   }
 
   def q2TransformWithState(events: Dataset[PwEvent]): Dataset[Q2Result] = {
     val spark = events.sparkSession
     import spark.implicits._
     withEventTs(events)
-      .select(col("event_ts"), col("word"), col("ltw"), col("port"))
+      .select(col("event_ts"), col("word"), col("ltw"), col("port"),
+        pmod(hash(col("word")), lit(Buckets)).as("bucket"))
       .withWatermark("event_ts", "0 milliseconds")
-      .as[(java.sql.Timestamp, String, Long, Int)]
-      .groupByKey { case (_, word, ltw, _) => (word, ltw) }
+      .groupBy(col("bucket")).as[Int, WordPort]
       .transformWithState(new Q2StatefulProcessor,
         org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
   }

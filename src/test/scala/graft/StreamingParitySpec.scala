@@ -980,20 +980,24 @@ class StreamingParitySpec extends SparkSpec {
     * file manager. The reference exposes live per-window state via
     * stateSnapshots() (MyMapWithStateWithIndexDstream.scala:65-69);
     * Structured Streaming's analogue is the statestore batch source over
-    * the checkpoint. Keys are the groupByKey tuples (word, ltw); values the
-    * processor's `portCounts` ValueState, its two parallel arrays zipped
-    * back into one map per key.
+    * the checkpoint. Keys are word buckets; each value is the processor's
+    * `bucketCounts` ValueState, whose parallel arrays are regrouped here
+    * into one port → count map per (word, ltw).
     */
   private def portCountsState(ckpt: String): Map[(String, Long), Map[Int, Long]] =
     withoutConf(LocalCheckpointFileManager.ConfKey) {
       spark.read.format("statestore")
-        .option("stateVarName", "portCounts")
+        .option("stateVarName", "bucketCounts")
         .load(ckpt)
-        .select(col("key._1").as("word"), col("key._2").as("ltw"),
-          expr("map_from_arrays(value.ports, value.counts)").as("counts"))
+        .select(col("value.words"), col("value.ltws"), col("value.ports"), col("value.counts"))
         .collect()
-        .map(r => (r.getString(0), r.getLong(1)) -> r.getAs[Map[Int, Long]]("counts"))
-        .toMap
+        .flatMap { r =>
+          val (words, ltws) = (r.getSeq[String](0), r.getSeq[Long](1))
+          val (ports, counts) = (r.getSeq[Int](2), r.getSeq[Long](3))
+          words.indices.map(i => (words(i), ltws(i)) -> (ports(i) -> counts(i)))
+        }
+        .groupMap(_._1)(_._2)
+        .map { case (k, pcs) => k -> pcs.toMap }
     }
 
   test("Q2 on the local checkpoint manager recovers across a restart; stock readers read it") {
@@ -1068,10 +1072,11 @@ class StreamingParitySpec extends SparkSpec {
     // filter uses the watermark the previous batch ran with, its eviction
     // watermark (the processor's) the one the previous batch produced.
     // Batch 2 below runs with late filter 1200 and eviction watermark
-    // 5000, so its window-1 rows (end 2000) get in and must close in the
-    // same batch: A on state from batch 0, L and F on first contact. F
-    // has a fourth distinct port: incomplete, 0. K closes by its timer,
-    // S and X too.
+    // 5000, so its window-1 rows (end 2000) get past the engine's filter
+    // but are late for the processor, which drops every row whose window
+    // ended at or before the eviction watermark: A keeps its state from
+    // batch 0 (ports p1, p2: incomplete, 0), L and F get no window. K
+    // closes by its timer or by its bucket's window-1 rows, S and X too.
     val (p1, p2, p3, p4) = (10105, 10107, 10109, 10111)
     val batches = Seq(
       Seq(PwEvent(1100, p1, "A"), PwEvent(1150, p2, "A"), PwEvent(100, p1, "K"),
@@ -1094,53 +1099,90 @@ class StreamingParitySpec extends SparkSpec {
       finally query.stop()
     }
     val got = s.table("q2_tws_late_close").as[Q2Result].collect().toSeq
-    val want = StreamingParity.q2Batch(batches.flatten.toDS())
+    val onTime = batches.patch(2, Nil, 1)
+    val want = StreamingParity.q2Batch(onTime.flatten.toDS())
       .as[Q2Result].collect().toSet.filter(_.ltw < 10L)
-    assert(want === Set(Q2Result("K", 0L, 1L), Q2Result("A", 1L, 1L),
-      Q2Result("S", 1L, 0L), Q2Result("L", 1L, 1L), Q2Result("F", 1L, 0L),
-      Q2Result("X", 5L, 0L)))
+    assert(want === Set(Q2Result("K", 0L, 1L), Q2Result("A", 1L, 0L),
+      Q2Result("S", 1L, 0L), Q2Result("X", 5L, 0L)))
     assert(got.size === got.toSet.size, "duplicate emissions")
     assert(got.toSet === want)
     assert(portCountsState(ckpt).keySet === Set(("SENTINEL", 10L)))
   }
 
-  test("Q2 refuses to restart from a checkpoint of the old MapState layout") {
+  test("transformWithState Q2 closes a window in the batch whose own rows pass its end") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    // One batch: word A's window-0 rows and one A row in window 1. The
+    // batch's eviction watermark is still 0, so no timer can fire; the
+    // window-1 row alone closes window 0, with no later trigger.
+    val batch = batch1.filter(_.word == "A") :+ PwEvent(1010, 0, "A")
+    withConfs(Harness.RocksDbStateStore,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+      val input = MemoryStream[PwEvent]
+      val query = StreamingParity.q2TransformWithState(input.toDS())
+        .writeStream.format("memory").queryName("q2_tws_same_batch")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        input.addData(batch); query.processAllAvailable()
+        val got = s.table("q2_tws_same_batch").as[Q2Result].collect().toSeq
+        val want = StreamingParity.q2Batch(batch.toDS()).as[Q2Result].collect()
+          .filter(_.ltw == 0L).toSeq
+        assert(want === Seq(Q2Result("A", 0L, 1L)))
+        assert(got === want)
+      } finally query.stop()
+    }
+  }
+
+  /** Writes a checkpoint with an earlier Q2 layout (its processor over the
+    * per-(word, window) `groupByKey` plan), restarts from it through
+    * [[StreamingParity.q2TransformWithState]] and returns the error.
+    */
+  private def restartError(old: org.apache.spark.sql.streaming.StatefulProcessor[
+      (String, Long), (java.sql.Timestamp, String, Long, Int), Q2Result])
+      : org.apache.spark.sql.streaming.StreamingQueryException = {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
     val ckpt = java.nio.file.Files.createTempDirectory("graft-old-layout").toString
     val out = java.nio.file.Files.createTempDirectory("graft-old-layout-out").toString
     val input = MemoryStream[PwEvent]
-    // q2TransformWithState's plan, with the processor passed in.
-    def start(processor: org.apache.spark.sql.streaming.StatefulProcessor[
-        (String, Long), (java.sql.Timestamp, String, Long, Int), Q2Result]) =
-      input.toDF()
+    def write(ds: org.apache.spark.sql.Dataset[Q2Result]) =
+      ds.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .outputMode(OutputMode.Append()).start()
+    withConfs(Harness.RocksDbStateStore) {
+      val first = write(input.toDF()
         .withColumn("event_ts", expr("timestamp_millis(event_time)"))
         .withColumn("ltw", expr(s"event_time div ${StreamingParity.SlotMs}"))
         .select(col("event_ts"), col("word"), col("ltw"), col("port"))
         .withWatermark("event_ts", "0 milliseconds")
         .as[(java.sql.Timestamp, String, Long, Int)]
         .groupByKey { case (_, word, ltw, _) => (word, ltw) }
-        .transformWithState(processor,
-          org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append()).start()
-    withConfs(Harness.RocksDbStateStore) {
-      val old = start(new StreamingParitySpec.MapStateQ2Processor)
-      try { input.addData(batch1); old.processAllAvailable() }
-      finally old.stop()
-      val restarted = start(new StreamingParity.Q2StatefulProcessor)
-      val err = try {
+        .transformWithState(old,
+          org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append()))
+      try { input.addData(batch1); first.processAllAvailable() }
+      finally first.stop()
+      val restarted = write(StreamingParity.q2TransformWithState(input.toDS()))
+      try {
         input.addData(batch2 ++ sentinel)
         intercept[org.apache.spark.sql.streaming.StreamingQueryException](
           restarted.processAllAvailable())
       } finally restarted.stop()
-      // The state schema check sees the MapState's (key, port) composite
-      // key where the ValueState keeps (key) alone.
-      assert(err.getMessage.contains("STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"), err.getMessage)
     }
+  }
+
+  // The state schema check sees a (word, ltw) key where the bucket
+  // layout keeps an int.
+  test("Q2 refuses to restart from a checkpoint of the old MapState layout") {
+    val err = restartError(new StreamingParitySpec.MapStateQ2Processor)
+    assert(err.getMessage.contains("STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"), err.getMessage)
+  }
+
+  test("Q2 refuses to restart from a checkpoint of the per-(word, window) ValueState layout") {
+    val err = restartError(new StreamingParitySpec.WindowValueStateQ2Processor)
+    assert(err.getMessage.contains("STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"), err.getMessage)
   }
 
   test("per-trigger Q1: each micro-batch equals the batch plan on that batch's rows") {
@@ -1811,9 +1853,42 @@ class StreamingParitySpec extends SparkSpec {
 }
 
 object StreamingParitySpec {
-  /** The `portCounts` layout before the ValueState change: a MapState of
-    * port -> count under the same state variable name. Kept only to write
-    * an old-layout checkpoint; nothing closes its windows.
+  /** One (word, window)'s per-port counts in the per-window layout. */
+  case class PortCounts(ports: Array[Int], counts: Array[Long])
+
+  /** The layout before the word-bucket state: one `PortCounts` ValueState
+    * per (word, window) key. Kept only to write a checkpoint of that
+    * layout; nothing closes its windows.
+    */
+  class WindowValueStateQ2Processor
+      extends org.apache.spark.sql.streaming.StatefulProcessor[
+        (String, Long), (java.sql.Timestamp, String, Long, Int), Q2Result] {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
+
+    @transient private var portCounts: ValueState[PortCounts] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      portCounts = getHandle.getValueState[PortCounts](
+        "portCounts", Encoders.product[PortCounts], TTLConfig.NONE)
+
+    override def handleInputRows(key: (String, Long),
+        rows: Iterator[(java.sql.Timestamp, String, Long, Int)],
+        timers: TimerValues): Iterator[Q2Result] = {
+      val stored = portCounts.get() // null: first contact
+      val counts = scala.collection.mutable.Map.from(
+        if (stored == null) Nil else stored.ports.toSeq.zip(stored.counts))
+      rows.foreach { case (_, _, _, port) => counts(port) = counts.getOrElse(port, 0L) + 1L }
+      if (stored == null) getHandle.registerTimer((key._2 + 1) * StreamingParity.SlotMs)
+      portCounts.update(PortCounts(counts.keys.toArray, counts.values.toArray))
+      Iterator.empty
+    }
+  }
+
+
+  /** The `portCounts` layout before the per-window ValueState: a MapState
+    * of port -> count per (word, window) key. Kept only to write an
+    * old-layout checkpoint; nothing closes its windows.
     */
   class MapStateQ2Processor
       extends org.apache.spark.sql.streaming.StatefulProcessor[
